@@ -3,6 +3,8 @@
 Local mode stands in for a multi-executor cluster; every knob set here
 is the same one you would set in ``spark-submit --conf`` on a real
 cluster. Parallelism comes from ``SPARK_GRAFT_CPUS`` (driver contract).
+The driver heap comes from ``SPARK_GRAFT_DRIVER_MEM`` (default ``8g``);
+lower it for processes that share a host, e.g. several writer drivers.
 """
 
 from __future__ import annotations

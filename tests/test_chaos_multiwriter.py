@@ -28,6 +28,10 @@ from mex_extractors_spark.lake.table import LakeTable
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# Every writer is a whole driver JVM; these small replays run in a 1g
+# heap instead of the engine's 8g default.
+WRITER_ENV = {"SPARK_GRAFT_DRIVER_MEM": "1g"}
+
 _WRITER = textwrap.dedent(
     """
     import sys
@@ -65,6 +69,7 @@ def _spawn(tmp_path, tag, lake_dir, events_dir, n, buckets):
         stderr=subprocess.STDOUT,
         text=True,
         cwd=str(tmp_path),
+        env={**os.environ, **WRITER_ENV},
     )
 
 
@@ -96,9 +101,10 @@ def test_sigkill_one_writer_restart_converges(spark, tmp_path):
         time.sleep(0.2)
     assert killed, "writer b never committed before the deadline"
     pb.kill()
-    pb.communicate()
+    (tmp_path / "writer-b.log").write_text(pb.communicate()[0])
 
     out_a = pa.communicate(timeout=900)[0]
+    (tmp_path / "writer-a.log").write_text(out_a)
     assert pa.returncode == 0, out_a[-3000:]
     assert "WRITER-OK" in out_a
 
@@ -106,6 +112,7 @@ def test_sigkill_one_writer_restart_converges(spark, tmp_path):
     # ledger, the rest apply (rebasing over a's commits if claims race)
     pb2 = _spawn(tmp_path, "b2", lake_dir, events_dir, n, [2, 3])
     out_b = pb2.communicate(timeout=900)[0]
+    (tmp_path / "writer-b2.log").write_text(out_b)
     assert pb2.returncode == 0, out_b[-3000:]
     assert "WRITER-OK" in out_b
     # the restart must have found prior acked state to skip

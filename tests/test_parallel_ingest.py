@@ -27,6 +27,11 @@ from mex_extractors_spark.lake.table import LakeTable
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# Every writer is a whole driver JVM. At the engine's default 8g heap,
+# eight writers plus the test session may claim far more heap than a
+# 16 GB host has; these small replays run in 1g.
+WRITER_ENV = {"SPARK_GRAFT_DRIVER_MEM": "1g"}
+
 _WRITER = textwrap.dedent(
     """
     import sys
@@ -60,7 +65,8 @@ def test_two_processes_converge_to_oracle(spark, tmp_path):
     LakeTable(lake_dir, num_buckets=4)
 
     procs = []
-    for tag, buckets in (("a", [0, 1]), ("b", [2, 3])):
+    tags = ("a", "b")
+    for tag, buckets in zip(tags, ([0, 1], [2, 3])):
         script = _WRITER.format(
             repo=REPO,
             tag=tag,
@@ -76,10 +82,12 @@ def test_two_processes_converge_to_oracle(spark, tmp_path):
                 stderr=subprocess.STDOUT,
                 text=True,
                 cwd=str(tmp_path),
+                env={**os.environ, **WRITER_ENV},
             )
         )
     outs = [p.communicate(timeout=900)[0] for p in procs]
-    for p, out in zip(procs, outs):
+    for tag, p, out in zip(tags, procs, outs):
+        (tmp_path / f"writer-{tag}.log").write_text(out)
         assert p.returncode == 0, out[-3000:]
         assert "WRITER-OK" in out
 
@@ -197,11 +205,13 @@ def test_eight_processes_converge_with_forced_cas_losses(spark, tmp_path):
                 [sys.executable, "-c", script],
                 stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
                 text=True, cwd=str(tmp_path),
+                env={**os.environ, **WRITER_ENV},
             )
         )
     outs = [p.communicate(timeout=900)[0] for p in procs]
     applied = attempts = 0
-    for p, out in zip(procs, outs):
+    for w, (p, out) in enumerate(zip(procs, outs)):
+        (tmp_path / f"writer-{w}.log").write_text(out)
         assert p.returncode == 0, out[-3000:]
         ok = [ln for ln in out.splitlines() if ln.startswith("WRITER-OK")]
         assert ok, out[-3000:]
