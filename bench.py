@@ -204,7 +204,6 @@ def run_replay(
     num_buckets: int = 32,
     merge_mode: str = "cow",
     compact_after: bool = False,
-    checksum_mode: str | None = None,
 ) -> dict:
     """Replay pre-generated segments into a fresh lake table; timed.
 
@@ -246,8 +245,6 @@ def run_replay(
             # pure-mode bench: no mid-replay escalation, compaction is
             # timed explicitly below
             max_deltas_per_bucket=None,
-            checksum_mode=checksum_mode
-            or os.environ.get("BENCH_CHECKSUM_MODE", "readback"),
         )
         # full extract→transform→load: every event runs the normalize
         # stage (lang vocab map, per-row content sha256, size) before the

@@ -84,6 +84,18 @@ def _agg_exprs(count_alias: str, sum_cols: dict[str, str], sign) -> list:
     return exprs
 
 
+def _check_derived_key(derived: LakeTable, group_cols: list[str]) -> None:
+    """The derived table must be keyed on exactly ``group_cols``: a
+    subset key would LWW-collapse the per-group rows nondeterministically.
+    Column order is free — the derived table buckets on its own
+    ``key_cols`` and every read/merge here joins by column name."""
+    if sorted(derived.key_cols) != sorted(group_cols):
+        raise ValueError(
+            f"derived table key_cols must equal group_cols "
+            f"({group_cols}), got {list(derived.key_cols)}"
+        )
+
+
 def _non_null_groups(df, group_cols):
     """NULL-group rows are excluded by contract (see refresh_aggregates
     docstring): lake keys cannot be NULL, and the full-build, CDF-diff,
@@ -127,11 +139,7 @@ def refresh_aggregates(
     """
     sum_cols = dict(sum_cols or {})
     group_cols = list(group_cols)
-    if list(derived.key_cols) != group_cols:
-        raise ValueError(
-            f"derived table key_cols must equal group_cols "
-            f"({group_cols}), got {list(derived.key_cols)}"
-        )
+    _check_derived_key(derived, group_cols)
     snap = source.current_snapshot()
     if snap is None and to_version is None:
         return RefreshStats(0, 0, full_build=False, applied=False)
@@ -226,11 +234,7 @@ def full_refresh(
     derived key must equal ``group_cols``."""
     sum_cols = dict(sum_cols or {})
     group_cols = list(group_cols)
-    if list(derived.key_cols) != group_cols:
-        raise ValueError(
-            f"derived table key_cols must equal group_cols "
-            f"({group_cols}), got {list(derived.key_cols)}"
-        )
+    _check_derived_key(derived, group_cols)
     snap = source.current_snapshot()
     if snap is None:
         return RefreshStats(0, 0, full_build=False, applied=False)

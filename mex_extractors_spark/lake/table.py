@@ -37,8 +37,10 @@ import shutil
 import threading
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from functools import reduce
+from itertools import islice
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -128,6 +130,18 @@ def _bucket_sig(meta: dict) -> tuple:
     )
 
 
+def _schema_of(snap: dict | None, sv: int | None = None) -> StructType | None:
+    """Version ``sv`` of a snapshot's schema log (default: its read
+    schema); None before the snapshot's first data commit."""
+    sv = sv or (snap or {}).get("schema_version")
+    return StructType.fromJson(snap["schemas"][str(sv)]) if sv else None
+
+
+def _file_rows(meta: dict) -> int:
+    """Rows in a bucket entry's files: base plus every delta group."""
+    return int(meta["rows"]) + sum(int(d["rows"]) for d in meta.get("deltas", []))
+
+
 class CommitAborted(RuntimeError):
     """Raised by the crash-injection hook after data-file write, before
     snapshot publish — simulates a kill for exactly-once chaos tests."""
@@ -135,12 +149,14 @@ class CommitAborted(RuntimeError):
 
 class CommitConflict(RuntimeError):
     """A concurrent writer won the commit CAS (snapshot version or
-    commit claim). ``apply_batch`` handles this internally — it
-    validates the new head and rebases when the touched buckets are
-    disjoint — so a surfaced CommitConflict means the conflict was NOT
-    rebasable: overlapping-bucket writers, a concurrent layout change,
-    a lost race on a maintenance commit (compact / rebucket / DML /
-    fast_forward), or retry exhaustion. Partition the writers by bucket
+    commit claim). Every snapshot commit (``apply_batch``, the
+    bookkeeping no-op, ``compact``, ``rebucket`` and the DML verbs)
+    handles this internally — it validates the new head and rebases
+    when the buckets it rewrote are untouched — so a surfaced
+    CommitConflict means the conflict was NOT rebasable: overlapping-
+    bucket writers, a concurrent layout change or rollback, a
+    ``rebucket`` racing any data commit, a lost ``fast_forward``, or
+    retry exhaustion. Partition the writers by bucket
     (``ReplayEngine.replay(buckets=...)``) or serialize them."""
 
 
@@ -163,7 +179,8 @@ def cas_publish_document(path: str, doc: dict, conflict_msg: str) -> None:
     commit log publish through (Iceberg's atomic snapshot commit). Two
     writers that both computed the same next version race; exactly one
     wins, the loser gets :class:`CommitConflict` and either rebases
-    onto the new head (``apply_batch``) or surfaces the conflict."""
+    onto the new head (every table snapshot commit, ``LakeTable._commit``)
+    or surfaces the conflict (``fast_forward``, catalog commits)."""
     tmp = path + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
         json.dump(doc, fh, sort_keys=True)
@@ -216,23 +233,35 @@ class DmlStats:
     source_invalid: int = 0  # merge_into: NULL-key source rows dropped
 
 
+@dataclass
+class _Committed:
+    """Outcome of ``LakeTable._commit``."""
+
+    applied: bool  # False: a twin writer had already committed the id
+    snapshot: dict  # the published snapshot, or the head holding the id
+    attempts: int  # publish attempts (1 = no contention)
+    t_write: float = 0.0
+    t_checksum: float = 0.0
+
+
 class LakeTable:
     """A single converged lake table keyed on ``key_cols`` with LWW by
-    ``seq_col``. Many readers; CONCURRENT writers are safe for
-    ``apply_batch`` (optimistic concurrency: commits whose touched
-    buckets are disjoint rebase-and-retry onto the new head, the
-    Iceberg validate-then-retry protocol; overlapping commits lose
-    loudly with :class:`CommitConflict`). Maintenance commits
-    (``compact``/``rebucket``/DML/``expire_snapshots``) remain
-    single-writer operator actions — run them quiesced.
+    ``seq_col``. Many readers; CONCURRENT writers are safe for every
+    snapshot commit — ``apply_batch``, ``compact`` and
+    ``delete_where``/``update_where``/``merge_into`` (optimistic
+    concurrency through one commit pipeline: a commit whose rewritten
+    buckets no intervening commit touched rebases-and-retries onto
+    the new head, the Iceberg validate-then-retry protocol;
+    overlapping commits lose loudly with :class:`CommitConflict`).
+    ``rebucket`` rewrites every bucket, so it rebases only over
+    bookkeeping-only commits. ``fast_forward`` and ``rollback_to``
+    move refs without a snapshot commit and never rebase, and
+    ``expire_snapshots``/``vacuum_orphans`` delete files an in-flight
+    commit has not published yet — run those quiesced.
     """
 
-    # above this many touched buckets the per-bucket conditional
-    # aggregates stop being cheap codegen and observe() is skipped
-    OBSERVE_CHECKSUM_MAX_BUCKETS = 256
-
-    # bounded optimistic-concurrency retries for apply_batch /
-    # _commit_noop: each retry re-validates against the healed head and
+    # bounded optimistic-concurrency retries for every snapshot commit
+    # (_commit): each retry re-validates against the healed head and
     # republishes METADATA only (the data files are attempt-unique and
     # already on storage), so retries cost no Spark job
     COMMIT_MAX_ATTEMPTS = 6
@@ -252,7 +281,6 @@ class LakeTable:
         seq_col: str = "seq",
         op_col: str = "op",
         num_buckets: int = 16,
-        checksum_mode: str = "readback",
         merge_mode: str = "cow",
         max_deltas_per_bucket: int | None = 8,
         stats_cols: Sequence[str] | None = None,
@@ -261,20 +289,12 @@ class LakeTable:
         bloom_hashes: int = BLOOM_HASHES_DEFAULT,
         idempotency_window: int = 8192,
     ) -> None:
-        """``checksum_mode``: how the per-bucket manifest checksums are
-        produced. "readback" (default) re-reads the just-written files
-        with a codegen'd groupBy aggregate, so the manifest certifies
-        bytes actually on storage (sha-after-serialize contract,
-        sinks/s3.py:106-109); the files were just written, so the read
-        hits the page cache (~10% of write wall measured). "observe"
-        piggybacks per-bucket conditional aggregates on the merge
-        output via ``Dataset.observe`` — zero extra jobs, BUT
-        CollectMetrics evaluates its aggregates through interpreted
-        per-row projections (no whole-stage codegen), which measured
-        ~80% EXTRA write wall at 32 buckets — use it only when the
-        write stage must stay the only action (e.g. sinks where a
-        read-back is impossible). ``verify_bucket_checksums`` re-audits
-        storage on demand either way.
+        """Every commit's per-bucket manifest checksums come from
+        re-reading the just-written files with one codegen'd groupBy
+        aggregate, so the manifest certifies bytes actually on storage
+        (sha-after-serialize contract, sinks/s3.py:106-109); the files
+        were just written, so the read hits the page cache.
+        ``verify_bucket_checksums`` re-audits storage on demand.
 
         ``merge_mode``: the writer's default merge strategy (a writer
         policy, not a table property — it is NOT persisted, and modes
@@ -323,8 +343,6 @@ class LakeTable:
         clamped to [BLOOM_BITS_DEFAULT, 2^22]. A fixed ``bloom_bits``
         pins the manifest cost instead — fpp then degrades once files
         exceed ~bloom_bits/10 distinct values."""
-        if checksum_mode not in ("observe", "readback"):
-            raise ValueError(f"unknown checksum_mode {checksum_mode!r}")
         if merge_mode not in ("cow", "mor", "auto"):
             raise ValueError(f"unknown merge_mode {merge_mode!r}")
         if bloom_bits is not None and (bloom_bits < 64 or bloom_bits % 64):
@@ -343,7 +361,6 @@ class LakeTable:
         self.seq_col = seq_col
         self.op_col = op_col
         self.num_buckets = num_buckets
-        self.checksum_mode = checksum_mode
         self.merge_mode = merge_mode
         self.max_deltas_per_bucket = max_deltas_per_bucket
         self.stats_cols = list(stats_cols or [])
@@ -400,11 +417,8 @@ class LakeTable:
         """All retained snapshots, oldest first — the Iceberg snapshot
         log (version, parent, commit time, row/schema summary)."""
         out = []
-        for f in sorted(os.listdir(self.ledger_dir)):
-            m = re.fullmatch(r"v(\d{8})\.json", f)
-            if not m:
-                continue
-            snap = self.snapshot_at(int(m.group(1)))
+        for v in self._versions():
+            snap = self.snapshot_at(v)
             out.append(
                 {
                     "version": snap["version"],
@@ -505,14 +519,10 @@ class LakeTable:
         parent chain from the head. Raises when every retained snapshot
         is newer than ``ts`` (older ones may have been expired)."""
         cur = self.current_snapshot()
-        v = cur["version"] if cur else 0
-        while v:
-            snap = self.snapshot_at(v)
-            if snap is None:
-                break  # lineage expired before reaching ts
-            if str(snap["committed_at"]) <= ts:
+        for v in self._lineage(cur["version"] if cur else 0):
+            snap = self.snapshot_at(v)  # None: lineage expired before ts
+            if snap is not None and str(snap["committed_at"]) <= ts:
                 return v
-            v = snap["parent"] or 0
         raise ValueError(
             f"no retained snapshot committed at or before {ts!r}"
         )
@@ -668,17 +678,28 @@ class LakeTable:
             raise ValueError(f"unknown branch {branch!r} (create_branch first)")
         return self.snapshot_at(v) if v else None
 
+    def _versions(self) -> list[int]:
+        """Every snapshot version on the ledger, ascending."""
+        return sorted(
+            int(f[1:9])
+            for f in os.listdir(self.ledger_dir)
+            if re.fullmatch(r"v\d{8}\.json", f)
+        )
+
+    def _lineage(self, version: int | None):
+        """``version`` and its ancestors, newest first; stops at the root
+        or after the first expired snapshot."""
+        while version:
+            yield version
+            snap = self.snapshot_at(version)
+            version = snap["parent"] if snap else None
+
     def _next_version(self) -> int:
         """Global monotone version counter across ALL branches — version
         numbers (and their data dirs) never collide, so the os.link CAS
         in ``_publish`` still serializes accidental concurrent writers
         even when they target different branches."""
-        versions = [
-            int(m.group(1))
-            for f in os.listdir(self.ledger_dir)
-            if (m := re.fullmatch(r"v(\d{8})\.json", f))
-        ]
-        return max(versions, default=0) + 1
+        return max(self._versions(), default=0) + 1
 
     def fast_forward(self, branch: str) -> int:
         """Atomically advance main to the branch head — the publish half
@@ -696,11 +717,7 @@ class LakeTable:
         cur_v = cur["version"] if cur else 0
         if head == cur_v:
             return head
-        v: int | None = head
-        while v is not None and v != cur_v:
-            snap = self.snapshot_at(v)
-            v = snap["parent"] if snap else None
-        if (v is None and cur_v != 0) or (v is not None and v != cur_v):
+        if cur_v and cur_v not in self._lineage(head):
             raise CommitConflict(
                 f"main v{cur_v} is not an ancestor of {branch!r} head "
                 f"v{head} — not a fast-forward"
@@ -734,12 +751,11 @@ class LakeTable:
         if self.snapshot_at(version) is None:
             raise ValueError(f"snapshot v{version} not found (expired or never published)")
         chain: list[int] = []  # chain versions in (version, head]
-        v: int | None = cur["version"]
-        while v is not None and v != version:
+        for v in self._lineage(cur["version"]):
+            if v == version:
+                break
             chain.append(v)
-            snap = self.snapshot_at(v)
-            v = snap["parent"] if snap else None
-        if v != version:
+        else:
             raise ValueError(
                 f"v{version} is not an ancestor of main head v{cur['version']} — "
                 "not a rollback (use fast_forward for branch heads)"
@@ -810,11 +826,7 @@ class LakeTable:
         cur = self.current_snapshot()
         if cur is None:
             return 0
-        versions = sorted(
-            int(m.group(1))
-            for f in os.listdir(self.ledger_dir)
-            if (m := re.fullmatch(r"v(\d{8})\.json", f))
-        )
+        versions = self._versions()
         # retention follows MAIN's parent chain (not "newest by number":
         # an abandoned audit-branch snapshot may carry the top version
         # and must not displace real history), plus every tag target and
@@ -822,20 +834,12 @@ class LakeTable:
         # fast_forward proves ancestry by walking parents, so expiring
         # an intermediate branch snapshot would make a legitimate
         # fast-forward unprovable
-        keep: set[int] = set()
-        v: int | None = cur["version"]
-        for _ in range(max(keep_last, 1)):
-            if v is None:
-                break
-            keep.add(v)
-            parent_snap = self.snapshot_at(v)
-            v = parent_snap["parent"] if parent_snap else None
+        keep = set(islice(self._lineage(cur["version"]), max(keep_last, 1)))
         for head in [*self.refs().values(), *(extra_keep or ())]:
-            b: int | None = head
-            while b and b not in keep:
+            for b in self._lineage(head):
+                if b in keep:
+                    break
                 keep.add(b)
-                bs = self.snapshot_at(b)
-                b = bs["parent"] if bs else None
         keep |= {v for v in self.tags().values() if v}
         expired = 0
         claim_refs = os.listdir(self.claims_dir)
@@ -878,8 +882,8 @@ class LakeTable:
         that ``expire_snapshots``/``vacuum_orphans`` reclaims.
 
         ``CommitConflict`` from either CAS means a concurrent commit
-        landed first; ``apply_batch`` rebases and retries when the
-        commits touch disjoint buckets."""
+        landed first; ``_commit`` rebases and retries when the commits
+        touch disjoint buckets."""
         version = snapshot["version"]
         snap_path = os.path.join(self.ledger_dir, f"v{version:08d}.json")
         cas_publish_document(
@@ -919,10 +923,7 @@ class LakeTable:
         return set(snap["applied_batches"]) if snap else set()
 
     def current_schema(self) -> StructType | None:
-        snap = self.current_snapshot()
-        if snap is None or not snap.get("schema_version"):
-            return None
-        return StructType.fromJson(snap["schemas"][str(snap["schema_version"])])
+        return _schema_of(self.current_snapshot())
 
     # --------------------------------------------------------------- read
 
@@ -984,20 +985,6 @@ class LakeTable:
                     pass
                 shutil.rmtree(view_dir, ignore_errors=True)
         self._cdf_scratch_gens = gens[cut:]
-
-    # snapshot keys that describe ONLY the commit that set them — a
-    # child snapshot copied from the head must never inherit them
-    _PER_COMMIT_KEYS = ("dml",)
-
-    def _child_snapshot(self, snap: dict) -> dict:
-        """Copy a head snapshot as the starting point for a child
-        commit, stripping per-commit keys (``dml`` provenance). Every
-        head-copying commit path goes through here so the invariant is
-        structural, not an ad-hoc ``pop()`` each site must remember."""
-        child = dict(snap)
-        for k in self._PER_COMMIT_KEYS:
-            child.pop(k, None)
-        return child
 
     def _start_scratch_heartbeat(self, view_dir: str) -> threading.Event:
         """Bump the scratch view dir's mtime every TTL/4 while the merge
@@ -1099,9 +1086,9 @@ class LakeTable:
     ) -> tuple[dict[int, tuple[int, str]], dict[int, dict[str, list]]]:
         """Read back just-written files: per-bucket (rows, checksum) +
         capped distinct value sets for the manifest file stats — the one
-        codegen'd groupBy shared by apply_batch's readback mode,
-        rebucket, and compact (the manifest must certify identical
-        canonical bytes whichever path wrote the files)."""
+        codegen'd groupBy every commit runs in ``_commit`` (the manifest
+        must certify identical canonical bytes whichever writer produced
+        the files)."""
         written = spark.read.schema(schema).parquet(out_dir).withColumn(
             _BUCKET, self._bucket_expr()
         )
@@ -1250,9 +1237,7 @@ class LakeTable:
     def _stats_sidecar(self, rel: str) -> str:
         return os.path.join(self.path, rel) + ".stats.json"
 
-    def _persist_file_stats(
-        self, file_stats: dict[int, dict[str, dict]]
-    ) -> None:
+    def _persist_file_stats(self, file_stats: dict[str, dict]) -> None:
         """Write each new data file's stats next to it as an immutable
         sidecar (``<file>.parquet.stats.json``) instead of embedding
         them in every snapshot document: manifests stay O(file list) no
@@ -1264,13 +1249,12 @@ class LakeTable:
         Sidecars are written before the snapshot publish, so a crash
         leaves them orphaned alongside their data files and
         ``vacuum_orphans`` reclaims both."""
-        for per_file in file_stats.values():
-            for rel, st in per_file.items():
-                path = self._stats_sidecar(rel)
-                tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-                with open(tmp, "w") as fh:
-                    json.dump(st, fh, sort_keys=True)
-                os.replace(tmp, path)
+        for rel, st in file_stats.items():
+            path = self._stats_sidecar(rel)
+            tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
+            with open(tmp, "w") as fh:
+                json.dump(st, fh, sort_keys=True)
+            os.replace(tmp, path)
 
     def _load_stats_sidecar(self, rel: str) -> dict | None:
         """Stats for one data file from its sidecar, memoized per
@@ -1308,12 +1292,17 @@ class LakeTable:
         with_blooms: bool = True,
         extra_cols: "Sequence[str] | None" = None,
     ) -> dict[int, list[str]]:
-        """Shared post-write manifest assembly (apply_batch / rebucket /
-        compact): map just-written files to their buckets, build the
-        per-file blooms when this write carries them, and persist the
-        immutable stats sidecars. ONE implementation on purpose — the
-        file-naming regex and sidecar policy must not drift between the
-        three writers. Returns files_by_bucket (repo-relative paths)."""
+        """Post-write manifest assembly (run by ``_commit`` for every
+        writer): map just-written files to their buckets and persist
+        each file's stats sidecar — min/max/null_count from the parquet
+        footers (driver-side footer read, no data job — the Iceberg
+        writers-emit-stats model) plus its bucket's distinct value sets
+        and, when this write carries them, blooms (both cover all of the
+        bucket's files from this write, so per file they are
+        conservative). ``extra_cols`` widens the footer read beyond
+        ``stats_cols`` — a clustered compaction always records bounds
+        for its cluster columns, or the whole rewrite would prune
+        nothing. Returns files_by_bucket (repo-relative paths)."""
         files_by_bucket: dict[int, list[str]] = {}
         for f in os.listdir(out_dir):
             m = _BUCKET_NAME_RE.search(f)
@@ -1331,56 +1320,23 @@ class LakeTable:
                 ),
             )
             if self.bloom_cols and with_blooms
-            else None
+            else {}
         )
-        file_stats = self._collect_file_stats(
-            files_by_bucket, value_sets, blooms, extra_cols=extra_cols
-        )
+        footer_cols = sorted(set(self.stats_cols) | set(extra_cols or ()))
+        file_stats: dict[str, dict] = {}
+        for b, rels in files_by_bucket.items() if footer_cols or blooms else ():
+            for rel in rels:
+                st = footer_column_stats(os.path.join(self.path, rel), footer_cols)
+                for kind, per_col in (
+                    ("values", value_sets.get(b) or {}),
+                    ("bloom", blooms.get(b) or {}),
+                ):
+                    for c, v in per_col.items():
+                        st.setdefault(c, {"min": None, "max": None, "nulls": 0})[kind] = v
+                if st:
+                    file_stats[rel] = st
         self._persist_file_stats(file_stats)  # sidecars, not manifest bloat
         return files_by_bucket
-
-    def _collect_file_stats(
-        self,
-        files_by_bucket: dict[int, list[str]],
-        value_sets: dict[int, dict[str, list]] | None = None,
-        blooms: dict[int, dict[str, dict]] | None = None,
-        extra_cols: Sequence[str] | None = None,
-    ) -> dict[int, dict[str, dict]]:
-        """Per-bucket ``{relpath: {col: stats}}`` for freshly written
-        files: min/max/null_count from the parquet footers (driver-side
-        footer read, O(touched buckets), no data job — the Iceberg
-        writers-emit-stats model) merged with the per-bucket distinct
-        value sets the write's observe() collected. ``extra_cols``
-        widens the footer read beyond ``stats_cols`` — a clustered
-        compaction always records bounds for its cluster columns, or
-        the whole rewrite would prune nothing."""
-        footer_cols = sorted(set(self.stats_cols) | set(extra_cols or ()))
-        if not footer_cols and not blooms:
-            return {}
-        out: dict[int, dict[str, dict]] = {}
-        for b, rels in files_by_bucket.items():
-            vs = (value_sets or {}).get(b) or {}
-            bl = (blooms or {}).get(b) or {}
-            per_file: dict[str, dict] = {}
-            for rel in rels:
-                st = footer_column_stats(
-                    os.path.join(self.path, rel), footer_cols
-                )
-                for c, vals in vs.items():
-                    # a bucket's value set covers ALL its files from this
-                    # write (normally exactly one)
-                    st.setdefault(c, {"min": None, "max": None, "nulls": 0})
-                    st[c]["values"] = vals
-                for c, bloom in bl.items():
-                    # likewise: the bucket bloom covers all its files
-                    # from this write, so per-file it is conservative
-                    st.setdefault(c, {"min": None, "max": None, "nulls": 0})
-                    st[c]["bloom"] = bloom
-                if st:
-                    per_file[rel] = st
-            if per_file:
-                out[b] = per_file
-        return out
 
     def _write_bucketed(
         self,
@@ -1465,11 +1421,7 @@ class LakeTable:
         snap = self.snapshot_at(version) if version is not None else self.current_snapshot()
         if version is not None and snap is None:
             raise ValueError(f"snapshot v{version} not found (expired or never published)")
-        schema = (
-            StructType.fromJson(snap["schemas"][str(snap["schema_version"])])
-            if snap and snap.get("schema_version")
-            else None
-        )
+        schema = _schema_of(snap)
         if snap is None or schema is None or not snap["buckets"]:
             return spark.createDataFrame([], schema or StructType([]))
         wanted = set(buckets) if buckets is not None else None
@@ -1517,11 +1469,7 @@ class LakeTable:
         for b, meta in snap["buckets"].items():
             if wanted is not None and int(b) not in wanted:
                 continue
-            fields = set(
-                StructType.fromJson(
-                    snap["schemas"][str(meta["schema_version"])]
-                ).fieldNames()
-            )
+            fields = set(_schema_of(snap, int(meta["schema_version"])).fieldNames())
             fstats = meta.get("file_stats") or {}  # legacy embedded layout
             for rel in meta["files"]:
                 st = fstats.get(rel)
@@ -1575,22 +1523,18 @@ class LakeTable:
         for sv, files in sorted(by_schema.items()):
             if not files:
                 continue
-            file_schema = StructType.fromJson(snap["schemas"][str(sv)])
-            df = spark.read.schema(file_schema).parquet(*files)
+            df = spark.read.schema(_schema_of(snap, sv)).parquet(*files)
             parts.append(align_to_schema(df, schema))
         if not parts:
             return spark.createDataFrame([], schema)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
 
     def _delta_schema(self, snap: dict, sv: int) -> StructType:
         """On-disk schema of a delta file group: the table schema at its
         version plus the op column (tombstones ride in deltas)."""
         return StructType(
             [
-                *StructType.fromJson(snap["schemas"][str(sv)]).fields,
+                *_schema_of(snap, sv).fields,
                 StructField(self.op_col, StringType()),
             ]
         )
@@ -1624,10 +1568,7 @@ class LakeTable:
                 continue
             df = spark.read.schema(self._delta_schema(snap, sv)).parquet(*files)
             parts.append(align_to_schema(df, target))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
 
     def read_key(self, spark: SparkSession, **key_values) -> DataFrame:
         """Point lookup: the state of one key (or one key prefix that
@@ -1816,15 +1757,15 @@ class LakeTable:
 
         if not touched:
             # still record the batch id so replay bookkeeping stays exact
-            attempts = self._commit_noop(snap, batch_id, ref=branch)
+            res = self._commit(spark, snap, branch, batch_id)
             return ApplyStats(
                 batch_id=batch_id,
-                applied=True,
+                applied=res.applied,
                 events_in=events_in,
                 events_invalid=events_invalid,
                 events_fenced=events_in - events_invalid,
                 seconds=time.monotonic() - t0,
-                commit_attempts=attempts,
+                commit_attempts=res.attempts,
             )
 
         # --- merge-strategy resolution (see __init__ docstring)
@@ -1833,11 +1774,7 @@ class LakeTable:
         }
         requested = mode or self.merge_mode
         if requested == "auto":
-            touched_file_rows = sum(
-                int(m["rows"]) + sum(int(d["rows"]) for d in m.get("deltas", []))
-                for m in touched_metas.values()
-                if m
-            )
+            touched_file_rows = sum(_file_rows(m) for m in touched_metas.values() if m)
             use_mor = snap is not None and touched_file_rows > self.AUTO_COW_FACTOR * max(kept, 1)
         else:
             use_mor = requested == "mor"
@@ -1850,24 +1787,15 @@ class LakeTable:
             m and m.get("deltas") for m in touched_metas.values()
         )
 
-        # --- schema evolution before apply
+        # --- schema evolution before apply (_commit registers the
+        #     written schema in the head's schema log)
         payload_schema = StructType(
             [f for f in fenced.schema.fields if f.name not in (_BUCKET, self.op_col)]
         )
         if snap is None or not snap.get("schema_version"):
-            schemas = dict(snap["schemas"]) if snap else {}
             table_schema = payload_schema
-            schema_version = 1
-            schemas["1"] = table_schema.jsonValue()
         else:
-            schemas = dict(snap["schemas"])
-            old = StructType.fromJson(schemas[str(snap["schema_version"])])
-            table_schema = merge_schemas(old, payload_schema)
-            if table_schema.jsonValue() == old.jsonValue():
-                schema_version = snap["schema_version"]
-            else:
-                schema_version = snap["schema_version"] + 1
-                schemas[str(schema_version)] = table_schema.jsonValue()
+            table_schema = merge_schemas(_schema_of(snap), payload_schema)
 
         # --- copy-on-write merge of touched buckets only: ONE payload
         #     shuffle, over the BATCH alone. The batch is LWW-reduced by a
@@ -1902,18 +1830,21 @@ class LakeTable:
         # fallback goes through the delta-aware read() and the rewrite
         # folds the deltas back into the base
         fast = not touched_have_deltas and all(
-            _reader_compatible(StructType.fromJson(schemas[str(sv)]), table_schema)
+            _reader_compatible(_schema_of(snap, sv), table_schema)
             for sv in touched_versions
         )
 
-        version = self._next_version()
-        rel_out, out_dir = self._new_data_dir(version)
+        def _raise_watermarks(head: dict | None) -> dict:
+            wm = {
+                int(k): int(v) for k, v in (head or {}).get("watermarks", {}).items()
+            }
+            for b, w in new_wm.items():
+                wm[b] = max(wm.get(b, -1), w)
+            return {"watermarks": {str(k): v for k, v in wm.items()}}
+
         t_phase = time.monotonic()
-        shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
         view_dir, cur_tbl, hb_stop = None, None, None
         try:
-            # merge exchange sized to the bucket count (single writer)
-            spark.conf.set("spark.sql.shuffle.partitions", str(self.num_buckets))
             if use_mor:
                 # merge-on-read append: the LWW-reduced batch IS the
                 # delta — deletes stay as tombstone rows, the table side
@@ -1980,307 +1911,37 @@ class LakeTable:
                 merged = apply_deletes(batch_latest, op_col=self.op_col).drop(
                     self.op_col
                 )
-            # manifest stats ride along with the write when possible:
-            # per-bucket conditional aggregates over the merge output
-            # observed DURING the write action — no separate stats job
-            write_obs = None
-            use_observe = (
-                self.checksum_mode == "observe"
-                and 0 < len(touched) <= self.OBSERVE_CHECKSUM_MAX_BUCKETS
+            t_plan = time.monotonic() - t_phase
+            res = self._commit(
+                spark,
+                snap,
+                branch,
+                batch_id,
+                df=merged,
+                schema=table_schema,
+                touched=touched,
+                delta=use_mor,
+                # merge exchange sized to the bucket count
+                shuffle_partitions=self.num_buckets,
+                fields=_raise_watermarks,
+                crash_after_data=crash_after_data,
             )
-            written_schema = schema_with_op if use_mor else table_schema
-            vs_cols = [c for c in self.stats_cols if c in written_schema.fieldNames()]
-            if use_observe:
-                write_obs = Observation()
-                canonical = F.to_json(F.struct(*sorted(written_schema.fieldNames())))
-                # materialize the bucket id and row hash ONCE as columns:
-                # the per-bucket conditional aggregates below reference
-                # them as plain attributes, so each row pays one murmur3 +
-                # one canonical-json xxhash total — NOT one per bucket
-                # (with N buckets the un-materialized form re-evaluates
-                # both inside every `when`, which at 32 buckets made the
-                # observe cost MORE than the readback job it replaced)
-                merged = merged.withColumn(
-                    "_ck_bucket", self._bucket_expr()
-                ).withColumn(
-                    "_ck_hash", F.xxhash64(canonical).cast("decimal(38,0)")
-                )
-                bcol, hcol = F.col("_ck_bucket"), F.col("_ck_hash")
-                obs_aggs = []
-                for b in touched:
-                    obs_aggs.append(
-                        F.coalesce(
-                            F.sum(F.when(bcol == b, hcol)),
-                            F.lit(0).cast("decimal(38,0)"),
-                        ).alias(f"c{b}")
-                    )
-                    obs_aggs.append(
-                        F.count(F.when(bcol == b, F.lit(1))).alias(f"r{b}")
-                    )
-                # distinct value sets for the manifest file stats ride the
-                # same observe — zero extra jobs; capped driver-side (an
-                # overflowed set carries no pruning power and is dropped)
-                if vs_cols and len(touched) * len(vs_cols) <= 2 * self.OBSERVE_CHECKSUM_MAX_BUCKETS:
-                    for b in touched:
-                        for ci, c in enumerate(vs_cols):
-                            obs_aggs.append(
-                                F.slice(
-                                    F.array_sort(
-                                        F.collect_set(F.when(bcol == b, F.col(c)))
-                                    ),
-                                    1,
-                                    VALUE_SET_MAX + 1,
-                                ).alias(f"v{b}_{ci}")
-                            )
-                merged = merged.observe(write_obs, *obs_aggs).drop(
-                    "_ck_bucket", "_ck_hash"
-                )
-            self._write_bucketed(spark, merged, out_dir)
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
             if hb_stop is not None:
                 hb_stop.set()
             if cur_tbl is not None:
                 spark.sql(f"DROP TABLE IF EXISTS {cur_tbl}")
             if view_dir is not None:
                 shutil.rmtree(view_dir, ignore_errors=True)
-        t_write = time.monotonic() - t_phase
-
-        if crash_after_data:
-            raise CommitAborted(
-                f"batch {batch_id}: data files written to {out_dir}, snapshot NOT published"
+        if not res.applied:
+            return ApplyStats(
+                batch_id=batch_id,
+                applied=False,
+                events_in=events_in,
+                events_invalid=events_invalid,
+                seconds=time.monotonic() - t0,
+                commit_attempts=res.attempts,
             )
-
-        # --- per-bucket rows + order-independent integrity checksum.
-        #     "observe" mode already collected them during the write
-        #     (zero extra jobs); "readback" mode re-reads the files just
-        #     written so the manifest certifies bytes on storage
-        #     (sha256-after-serialize contract, sinks/s3.py:106-109).
-        #     verify_bucket_checksums re-audits storage on demand either
-        #     way — parquet round-trips values exactly, so both modes
-        #     produce the identical checksum for identical rows.
-        t_phase = time.monotonic()
-        bucket_stats: dict[int, tuple[int, str]] | None = None
-        value_sets: dict[int, dict[str, list]] = {}
-        if write_obs is not None:
-            try:
-                row = write_obs.get
-                bucket_stats = {
-                    b: (int(row[f"r{b}"]), str(row[f"c{b}"])) for b in touched
-                }
-                for b in touched:
-                    for ci, c in enumerate(vs_cols):
-                        vals = row.get(f"v{b}_{ci}")
-                        if (
-                            vals is not None
-                            and len(vals) <= VALUE_SET_MAX
-                            and all(isinstance(v, (int, float, str, bool)) for v in vals)
-                        ):
-                            value_sets.setdefault(b, {})[c] = list(vals)
-            except Exception:
-                bucket_stats = None  # schemaless-observation edge: read back
-                value_sets = {}
-        if bucket_stats is None:
-            bucket_stats, value_sets = self._readback_bucket_stats(
-                spark, out_dir, written_schema
-            )
-        t_checksum = time.monotonic() - t_phase
-
-        # --- assemble + publish snapshot. Blooms ride BASE entries
-        # only: _prune_base_files never prunes delta files (they must
-        # always reach the MOR merge), so a mor batch skips the bloom
-        # job — compaction regenerates blooms when the deltas fold into
-        # a fresh base.
-        files_by_bucket = self._assemble_manifest_stats(
-            spark, out_dir, rel_out, written_schema, bucket_stats,
-            value_sets, with_blooms=not use_mor,
-        )
-        def _occ_map_schema(head: dict | None) -> tuple[dict, int, int]:
-            """Embed the WRITTEN schema into ``head``'s schema registry.
-
-            The data files are already on storage with ``table_schema``
-            — a rebase cannot change them, only re-register: reuse the
-            head's version id when an identical schema is registered,
-            else mint the next id; the head READ schema becomes the
-            merge of the head's and ours (an intervening commit may
-            have evolved other buckets). For ``head is snap`` (the
-            no-conflict case) this reproduces the pre-write evolution
-            step exactly."""
-            schemas2 = dict(head["schemas"]) if head else {}
-            ours = table_schema.jsonValue()
-            files_sv = next(
-                (int(k) for k, v in schemas2.items() if v == ours), None
-            )
-            if files_sv is None:
-                files_sv = max((int(k) for k in schemas2), default=0) + 1
-                schemas2[str(files_sv)] = ours
-            if head and head.get("schema_version"):
-                head_schema = StructType.fromJson(
-                    schemas2[str(head["schema_version"])]
-                )
-                merged_json = merge_schemas(head_schema, table_schema).jsonValue()
-                head_sv = next(
-                    (int(k) for k, v in schemas2.items() if v == merged_json),
-                    None,
-                )
-                if head_sv is None:
-                    head_sv = max(int(k) for k in schemas2) + 1
-                    schemas2[str(head_sv)] = merged_json
-            else:
-                head_sv = files_sv
-            return schemas2, head_sv, files_sv
-
-        def _occ_assemble(head: dict | None) -> dict:
-            """Snapshot metadata for this batch's files on top of
-            ``head`` — pure metadata, re-runnable against any head whose
-            touched buckets are unchanged (validated below)."""
-            schemas2, head_sv, files_sv = _occ_map_schema(head)
-            buckets_meta = dict(head["buckets"]) if head else {}
-            for b in touched:
-                rows, checksum = bucket_stats.get(b, (0, "0"))
-                if use_mor:
-                    # append a delta group; the base entry stays verbatim
-                    # (a bucket first written in mor mode gets an empty base)
-                    old_meta = buckets_meta.get(str(b)) or {
-                        "files": [],
-                        "schema_version": files_sv,
-                        "rows": 0,
-                        "checksum": "0",
-                    }
-                    new_meta = dict(old_meta)
-                    delta_group = {
-                        "files": sorted(files_by_bucket.get(b, [])),
-                        "schema_version": files_sv,
-                        "rows": rows,
-                        "checksum": checksum,
-                    }
-                    new_meta["deltas"] = [*old_meta.get("deltas", []), delta_group]
-                    buckets_meta[str(b)] = new_meta
-                else:
-                    # copy-on-write rewrite: fresh entry, deltas folded in
-                    buckets_meta[str(b)] = {
-                        "files": sorted(files_by_bucket.get(b, [])),
-                        "schema_version": files_sv,
-                        "rows": rows,
-                        "checksum": checksum,
-                    }
-            old_wm = {
-                int(k): int(v)
-                for k, v in (head["watermarks"] if head else {}).items()
-            }
-            for b, wm in new_wm.items():
-                old_wm[b] = max(old_wm.get(b, -1), wm)
-            return {
-                "version": self._next_version(),
-                "parent": head["version"] if head else None,
-                "schema_version": head_sv,
-                "schemas": schemas2,
-                "buckets": buckets_meta,
-                "watermarks": {str(k): v for k, v in old_wm.items()},
-                "applied_batches": self._trim_batches(
-                    head["applied_batches"] if head else [], batch_id
-                ),
-                "num_buckets": self.num_buckets,
-                "key_cols": self.key_cols,
-                "seq_col": self.seq_col,
-                # file-row total: equals the state row count for a
-                # delta-free snapshot; with deltas pending it upper-bounds
-                # the state (updates/tombstones collapse at read/compact)
-                "total_rows": sum(
-                    int(m["rows"]) + sum(int(d["rows"]) for d in m.get("deltas", []))
-                    for m in buckets_meta.values()
-                ),
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-
-        def _occ_validate(head: dict | None) -> str | None:
-            """Can this batch rebase onto ``head``? None = yes; "dup" =
-            a twin writer already applied the batch id; raises
-            ``CommitConflict`` on a true overlap (Iceberg's
-            validate-then-retry commit protocol)."""
-            if head is None:
-                raise CommitConflict(
-                    f"batch {batch_id!r}: commit conflicted but no head "
-                    "is visible — ledger inconsistency"
-                )
-            if batch_id in head["applied_batches"]:
-                return "dup"
-            if (
-                int(head.get("num_buckets") or 0) != self.num_buckets
-                or list(head.get("key_cols") or []) != list(self.key_cols)
-                or head.get("seq_col", self.seq_col) != self.seq_col
-            ):
-                raise CommitConflict(
-                    f"batch {batch_id!r}: a concurrent layout change "
-                    "(rebucket / key change) landed — cannot rebase"
-                )
-            # the base this batch was fenced/merged against must be an
-            # ancestor of the new head (a concurrent rollback is not)
-            base_v = snap["version"] if snap else None
-            v: int | None = head["version"]
-            while v is not None and v != base_v:
-                s = self.snapshot_at(v)
-                v = s["parent"] if s else None
-            if v != base_v:
-                raise CommitConflict(
-                    f"batch {batch_id!r}: base v{base_v} is no longer an "
-                    f"ancestor of head v{head['version']} — cannot rebase"
-                )
-            # every intervening commit must have left our buckets alone:
-            # the written files embed the merge against the BASE state
-            for b in touched:
-                base_meta = (snap or {}).get("buckets", {}).get(str(b), {})
-                if _bucket_sig(head["buckets"].get(str(b), {})) != _bucket_sig(
-                    base_meta
-                ):
-                    raise CommitConflict(
-                        f"batch {batch_id!r}: a concurrent commit rewrote "
-                        f"bucket {b} — overlapping writers must serialize"
-                    )
-            return None
-
-        # --- optimistic-concurrency publish: metadata-only retries. The
-        #     data files are attempt-unique and already written, so a
-        #     lost CAS costs a validate + re-assemble, never a Spark job.
-        head_for_commit = snap
-        committed: dict | None = None
-        last_err: CommitConflict | None = None
-        for attempt in range(self.COMMIT_MAX_ATTEMPTS):
-            if attempt:
-                try:
-                    new_head = self._head(branch)
-                    verdict = _occ_validate(new_head)
-                except CommitConflict:
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    raise
-                if verdict == "dup":
-                    # a twin writer (double-started job) applied this
-                    # very batch while we raced — exactly-once holds;
-                    # drop our unreferenced attempt files
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    return ApplyStats(
-                        batch_id=batch_id,
-                        applied=False,
-                        events_in=events_in,
-                        events_invalid=events_invalid,
-                        seconds=time.monotonic() - t0,
-                        commit_attempts=attempt + 1,
-                    )
-                head_for_commit = new_head
-            snapshot = _occ_assemble(head_for_commit)
-            try:
-                self._publish(snapshot, ref=branch)
-                committed = snapshot
-                break
-            except CommitConflict as err:
-                last_err = err
-        if committed is None:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise CommitConflict(
-                f"batch {batch_id!r}: lost the commit race "
-                f"{self.COMMIT_MAX_ATTEMPTS} times in a row"
-            ) from last_err
-        snapshot = committed
         return ApplyStats(
             batch_id=batch_id,
             applied=True,
@@ -2290,13 +1951,13 @@ class LakeTable:
             upserts=upserts,
             deletes=deletes,
             buckets_touched=len(touched),
-            rows_after=snapshot["total_rows"],
+            rows_after=res.snapshot["total_rows"],
             seconds=time.monotonic() - t0,
             mode="mor" if use_mor else "cow",
             t_stats=round(t_stats, 3),
-            t_write=round(t_write, 3),
-            t_checksum=round(t_checksum, 3),
-            commit_attempts=attempt + 1,
+            t_write=round(t_plan + res.t_write, 3),
+            t_checksum=round(res.t_checksum, 3),
+            commit_attempts=res.attempts,
         )
 
     def _trim_batches(self, old: "list[str]", batch_id: str) -> "list[str]":
@@ -2315,55 +1976,223 @@ class LakeTable:
         kept.append(batch_id)
         return kept[-self.idempotency_window:]
 
-    def _commit_noop(
-        self, snap: dict | None, batch_id: str, ref: str | None = None
-    ) -> int:
-        """Record a batch id whose events were all fenced (pure
-        redelivery). Bookkeeping-only, so a commit conflict rebases
-        unconditionally: rebuild on the new head and retry (or return,
-        if a twin writer already recorded the same batch id). Returns
-        the publish-attempt count (OCC telemetry)."""
-        last_err: CommitConflict | None = None
+    @staticmethod
+    def _register_schema(schemas: dict, schema: StructType) -> int:
+        """Id of ``schema`` in a snapshot's schema log (``schemas``,
+        mutated): the id of an identical schema, else the next free id."""
+        js = schema.jsonValue()
+        sv = next((int(k) for k, v in schemas.items() if v == js), None)
+        if sv is None:
+            sv = max((int(k) for k in schemas), default=0) + 1
+            schemas[str(sv)] = js
+        return sv
+
+    def _commit(
+        self,
+        spark: SparkSession,
+        head: dict | None,
+        ref: str | None,
+        commit_id: str | None = None,
+        df: DataFrame | None = None,
+        schema: StructType | None = None,
+        touched: Sequence[int] | None = (),
+        delta: bool = False,
+        cluster: dict | None = None,
+        write_opts: dict | None = None,
+        shuffle_partitions: int | None = None,
+        check: "Callable[[dict], None] | None" = None,
+        fields: "Callable[[dict | None], dict] | None" = None,
+        crash_after_data: bool = False,
+    ) -> _Committed:
+        """The ONE commit pipeline: every snapshot the table publishes
+        (apply, bookkeeping no-op, compact, rebucket, DML) is committed
+        here on top of write head ``head`` of ``ref`` (None = main).
+
+        1. ``df`` is written as ``schema`` (plus the op column for a
+           ``delta``) to an attempt-unique data dir, with
+           ``spark.sql.shuffle.partitions`` at ``shuffle_partitions``;
+        2. each bucket's rows + checksum are read back, so the manifest
+           certifies the bytes on storage;
+        3. ``check(bucket_stats)`` — the caller's certification — may
+           raise;
+        4. manifest stats and sidecars are assembled;
+        5. the snapshot is published with bounded validate-then-retry
+           (Iceberg's commit protocol). After a lost CAS the head is
+           re-read: if it already holds ``commit_id`` a twin writer
+           committed it (``applied=False``); a layout change, a base
+           that is no longer an ancestor, or a changed ``_bucket_sig``
+           on a rewritten bucket raises :class:`CommitConflict`; else
+           the metadata is re-assembled on the new head (no Spark job).
+
+        ``touched``: the rewritten buckets — each gets a fresh base
+        entry (carrying ``cluster``), or a delta group appended for a
+        ``delta``. ``None`` rewrites the whole table (rebucket): the
+        bucket map is rebuilt from the written buckets, and every bucket
+        must be unchanged to rebase. ``fields(head)``: extra snapshot
+        fields computed against the head an attempt commits onto. The
+        attempt dir is removed when the commit ends without publishing
+        it; any other exception leaves it to ``vacuum_orphans``."""
+        what = f"commit {commit_id!r}" if commit_id is not None else "maintenance commit"
+        bucket_stats: dict[int, tuple[int, str]] = {}
+        files_by_bucket: dict[int, list[str]] = {}
+        out_dir: str | None = None
+        t_write = t_checksum = 0.0
+        if df is not None:
+            written = (
+                StructType([*schema.fields, StructField(self.op_col, StringType())])
+                if delta
+                else schema
+            )
+            rel_out, out_dir = self._new_data_dir(self._next_version())
+            t_phase = time.monotonic()
+            shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
+            try:
+                if shuffle_partitions:
+                    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+                self._write_bucketed(spark, df, out_dir, **(write_opts or {}))
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
+            t_write = time.monotonic() - t_phase
+            if crash_after_data:
+                raise CommitAborted(
+                    f"{what}: data files written to {out_dir}, snapshot NOT published"
+                )
+            t_phase = time.monotonic()
+            bucket_stats, value_sets = self._readback_bucket_stats(spark, out_dir, written)
+            t_checksum = time.monotonic() - t_phase
+            if check is not None:
+                check(bucket_stats)
+            # blooms ride BASE entries only: _prune_base_files never
+            # prunes delta files, so a delta skips the bloom job —
+            # compaction regenerates blooms when deltas fold into a base
+            files_by_bucket = self._assemble_manifest_stats(
+                spark, out_dir, rel_out, written, bucket_stats, value_sets,
+                with_blooms=not delta, extra_cols=cluster["by"] if cluster else None,
+            )
+
+        def _validate(at: dict | None) -> None:
+            if at is None:
+                if head is None:
+                    return  # nothing landed on this ref: just re-version
+                raise CommitConflict(
+                    f"{what}: commit conflicted but no head is visible — "
+                    "ledger inconsistency"
+                )
+            want = head or {"num_buckets": self.num_buckets,
+                             "key_cols": self.key_cols, "seq_col": self.seq_col}
+            if any(at.get(k) != want.get(k) for k in ("num_buckets", "key_cols", "seq_col")):
+                raise CommitConflict(
+                    f"{what}: a concurrent layout change (rebucket / key "
+                    "change) landed — cannot rebase"
+                )
+            # the base this commit was computed against must be an
+            # ancestor of the new head (a concurrent rollback is not)
+            if head and head["version"] not in self._lineage(at["version"]):
+                raise CommitConflict(
+                    f"{what}: base v{head['version']} is no longer an "
+                    f"ancestor of head v{at['version']} — cannot rebase"
+                )
+            # every intervening commit must have left our buckets alone:
+            # the written files embed the rewrite of the BASE state
+            base = (head or {}).get("buckets", {})
+            for b in touched if touched is not None else {*base, *at["buckets"]}:
+                if _bucket_sig(at["buckets"].get(str(b), {})) != _bucket_sig(
+                    base.get(str(b), {})
+                ):
+                    raise CommitConflict(
+                        f"{what}: a concurrent commit rewrote bucket {b} — "
+                        "overlapping writers must serialize"
+                    )
+
+        def _assemble(at: dict | None) -> dict:
+            # ``dml`` describes only the commit that set it: never inherited
+            snapshot = (
+                {k: v for k, v in at.items() if k != "dml"}
+                if at
+                else {"watermarks": {}, "applied_batches": []}
+            )
+            schemas = dict(at["schemas"]) if at else {}
+            head_sv = files_sv = int((at or {}).get("schema_version") or 0)
+            if schema is not None:
+                # the files carry ``schema`` whatever the head; the head
+                # READ schema becomes the merge of the head's and ours (an
+                # intervening commit may have evolved other buckets)
+                files_sv = self._register_schema(schemas, schema)
+                head_sv = self._register_schema(
+                    schemas,
+                    merge_schemas(StructType.fromJson(schemas[str(head_sv)]), schema)
+                    if head_sv
+                    else schema,
+                )
+            buckets = dict(at["buckets"]) if at and touched is not None else {}
+            for b in bucket_stats if touched is None else touched:
+                rows, checksum = bucket_stats.get(b, (0, "0"))
+                group = {
+                    "files": sorted(files_by_bucket.get(b, [])),
+                    "schema_version": files_sv,
+                    "rows": rows,
+                    "checksum": checksum,
+                }
+                if delta:
+                    # append a delta group; the base entry stays verbatim
+                    # (a bucket first written as a delta gets an empty base)
+                    old = buckets.get(str(b)) or {
+                        **group, "files": [], "rows": 0, "checksum": "0"
+                    }
+                    group = {**old, "deltas": [*old.get("deltas", []), group]}
+                elif cluster:
+                    group["cluster"] = dict(cluster)
+                buckets[str(b)] = group
+            snapshot.update(
+                version=self._next_version(),
+                parent=at["version"] if at else None,
+                schema_version=head_sv,
+                schemas=schemas,
+                buckets=buckets,
+                num_buckets=self.num_buckets,
+                key_cols=self.key_cols,
+                seq_col=self.seq_col,
+                # file-row total: equals the state row count for a
+                # delta-free snapshot; with deltas pending it upper-bounds
+                # the state (updates/tombstones collapse at read/compact)
+                total_rows=sum(_file_rows(m) for m in buckets.values()),
+                committed_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+                **(fields(at) if fields else {}),
+            )
+            if commit_id is not None:
+                snapshot["applied_batches"] = self._trim_batches(
+                    snapshot["applied_batches"], commit_id
+                )
+            return snapshot
+
+        def _drop_attempt() -> None:
+            if out_dir is not None:
+                shutil.rmtree(out_dir, ignore_errors=True)
+
+        at, last_err = head, None
         for attempt in range(self.COMMIT_MAX_ATTEMPTS):
             if attempt:
-                snap = self._head(ref)
-                if snap is not None and batch_id in snap["applied_batches"]:
-                    return attempt + 1  # a twin writer recorded it — converged
-            if snap is None:
-                snapshot = {
-                    "version": self._next_version(),
-                    "parent": None,
-                    "schema_version": 0,
-                    "schemas": {},
-                    "buckets": {},
-                    "watermarks": {},
-                    "applied_batches": [batch_id],
-                    "num_buckets": self.num_buckets,
-                    "key_cols": self.key_cols,
-                    "seq_col": self.seq_col,
-                    "total_rows": 0,
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                }
-            else:
-                snapshot = self._child_snapshot(snap)
-                snapshot["version"] = self._next_version()
-                snapshot["parent"] = snap["version"]
-                snapshot["applied_batches"] = self._trim_batches(
-                    snap["applied_batches"], batch_id
-                )
-                snapshot["committed_at"] = time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                )
+                at = self._head(ref)
+                if at is not None and commit_id in at["applied_batches"]:
+                    # a twin writer (double-started job) committed this
+                    # very id while we raced — exactly-once holds
+                    _drop_attempt()
+                    return _Committed(False, at, attempt + 1, t_write, t_checksum)
+                try:
+                    _validate(at)
+                except CommitConflict:
+                    _drop_attempt()
+                    raise
+            snapshot = _assemble(at)
             try:
                 self._publish(snapshot, ref=ref)
-                return attempt + 1
             except CommitConflict as err:
                 last_err = err
+                continue
+            return _Committed(True, snapshot, attempt + 1, t_write, t_checksum)
+        _drop_attempt()
         raise CommitConflict(
-            f"no-op commit for batch {batch_id!r} lost the commit race "
-            f"{self.COMMIT_MAX_ATTEMPTS} times in a row"
+            f"{what}: lost the commit race {self.COMMIT_MAX_ATTEMPTS} times in a row"
         ) from last_err
 
     # ------------------------------------------------------------ utility
@@ -2406,7 +2235,7 @@ class LakeTable:
         for sv, files in sorted(by_sv.items()):
             if not files:
                 continue
-            schema_sv = StructType.fromJson(snap["schemas"][str(sv)])
+            schema_sv = _schema_of(snap, sv)
             canonical = F.to_json(F.struct(*sorted(schema_sv.fieldNames())))
             parts.append(
                 spark.read.schema(schema_sv)
@@ -2436,12 +2265,9 @@ class LakeTable:
                 )
         actual: dict[str, tuple[int, str]] = {}
         if parts:
-            allp = parts[0]
-            for p in parts[1:]:
-                allp = allp.unionByName(p)
             actual = {
                 str(r["_tag"]): (int(r["rows"]), str(r["checksum"]))
-                for r in allp.groupBy("_tag")
+                for r in reduce(DataFrame.unionByName, parts).groupBy("_tag")
                 .agg(
                     F.count(F.lit(1)).alias("rows"),
                     F.coalesce(F.sum("_h"), F.lit(0).cast(dec)).alias("checksum"),
@@ -2513,12 +2339,6 @@ class LakeTable:
         from_snap = self.snapshot_at(from_version)
         if to_snap is None or from_snap is None:
             raise ValueError("both snapshot versions must be retained")
-
-        def _schema_of(snap: dict) -> StructType | None:
-            if not snap.get("schema_version"):
-                return None
-            return StructType.fromJson(snap["schemas"][str(snap["schema_version"])])
-
         out_schema = _schema_of(to_snap) or _schema_of(from_snap)
         if out_schema is None:  # both snapshots empty bootstrap states
             return spark.createDataFrame(
@@ -2544,7 +2364,7 @@ class LakeTable:
             }
             return all(
                 _reader_compatible(
-                    StructType.fromJson(snap["schemas"][str(sv)]), out_schema
+                    _schema_of(snap, sv), out_schema
                 )
                 for sv in versions
             )
@@ -2660,12 +2480,14 @@ class LakeTable:
         updates whose delete already applied and resurrects deleted
         keys (tests/test_lake.py::test_rebucket_blocks_resurrection).
 
-        Crash-safe like apply_batch: data files land in a fresh version
-        directory first, the snapshot publish is atomic, and a kill in
-        between leaves orphans that ``vacuum_orphans`` reclaims. Returns
-        the committed snapshot version. Older snapshots keep reading
-        through their own manifests (time travel across the layout
-        change).
+        Crash-safe like every commit (``_commit``): data files land in a
+        fresh version directory first, the snapshot publish is atomic,
+        and a kill in between leaves orphans that ``vacuum_orphans``
+        reclaims. It rewrites every bucket, so a concurrent commit makes
+        it lose with ``CommitConflict`` unless that commit was
+        bookkeeping-only. Returns the committed snapshot version. Older
+        snapshots keep reading through their own manifests (time travel
+        across the layout change).
         """
         if new_num_buckets < 1:
             raise ValueError("new_num_buckets must be >= 1")
@@ -2677,108 +2499,45 @@ class LakeTable:
         if int(snap["num_buckets"]) == new_num_buckets:
             return snap["version"]
         schema = self.current_schema()
-        old_num = self.num_buckets
-        version = self._next_version()
-        if schema is None or not snap["buckets"]:
-            # only bookkeeping no-op snapshots so far: commit the layout
-            snapshot = self._child_snapshot(snap)
-            snapshot.update(
-                version=version, parent=snap["version"],
-                num_buckets=new_num_buckets,
-                committed_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        data: dict = {}  # no data yet (bookkeeping no-ops): commit the layout
+        if schema is not None and snap["buckets"]:
+            current = self.read(spark)  # aligned to the current schema, deltas merged
+            has_deltas = any(m.get("deltas") for m in snap["buckets"].values())
+            # with deltas pending, total_rows is a file-row bound, not the
+            # state count — establish the true expectation before the rewrite
+            expected_rows = current.count() if has_deltas else int(snap["total_rows"])
+
+            def _no_row_drift(bucket_stats: dict) -> None:
+                total = sum(rows for rows, _c in bucket_stats.values())
+                if total != expected_rows:
+                    raise RuntimeError(
+                        f"rebucket row-count drift: {total} != {expected_rows}"
+                    )
+
+            def _carry_fence(head: dict) -> dict:
+                wm_max = max((int(v) for v in head["watermarks"].values()), default=-1)
+                # EVERY new bucket gets the fence, including empty ones —
+                # an empty bucket left at -1 would admit redelivered updates
+                # for keys whose delete already applied (resurrection)
+                return {"watermarks": {str(b): wm_max for b in range(new_num_buckets)}}
+
+            data = dict(
+                df=current, schema=schema, shuffle_partitions=new_num_buckets,
+                check=_no_row_drift, fields=_carry_fence,
             )
-            self._publish(snapshot)
-            self.num_buckets = new_num_buckets
-            return version
-        current = self.read(spark)  # aligned to the current schema, deltas merged
-        has_deltas = any(m.get("deltas") for m in snap["buckets"].values())
-        # with deltas pending, total_rows is a file-row bound, not the
-        # state count — establish the true expectation before the rewrite
-        expected_rows = current.count() if has_deltas else int(snap["total_rows"])
-        rel_out, out_dir = self._new_data_dir(version)
-        shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
-        self.num_buckets = new_num_buckets
+        old_num, self.num_buckets = self.num_buckets, new_num_buckets
         try:
-            spark.conf.set("spark.sql.shuffle.partitions", str(new_num_buckets))
-            self._write_bucketed(spark, current, out_dir)
-            # read-back stats: a layout rewrite is rare enough that the
-            # manifest should certify the bytes actually on storage
-            bucket_stats, value_sets = self._readback_bucket_stats(
-                spark, out_dir, schema
-            )
-        except BaseException:
-            self.num_buckets = old_num
-            raise
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-        try:
-            return self._rebucket_publish(
-                spark, snap, version, rel_out, out_dir, schema,
-                bucket_stats, value_sets, expected_rows, new_num_buckets,
-            )
+            res = self._commit(spark, snap, None, touched=None, **data)
         except BaseException:
             # the committed layout is still the OLD one: a caller that
             # catches (drift, ENOSPC on sidecars, CommitConflict) and
             # keeps the handle must not bucket future batches with the
             # NEW count over OLD-layout metadata — that would be silent
-            # fencing/merge corruption. Only after _rebucket_publish's
-            # CAS lands may the handle keep the new count.
+            # fencing/merge corruption. Only after the commit lands may
+            # the handle keep the new count.
             self.num_buckets = old_num
             raise
-
-    def _rebucket_publish(
-        self,
-        spark: SparkSession,
-        snap: dict,
-        version: int,
-        rel_out: str,
-        out_dir: str,
-        schema: StructType,
-        bucket_stats: dict,
-        value_sets: dict,
-        expected_rows: int,
-        new_num_buckets: int,
-    ) -> int:
-        total = sum(rows for rows, _c in bucket_stats.values())
-        if total != expected_rows:
-            raise RuntimeError(
-                f"rebucket row-count drift: {total} != {expected_rows}"
-            )
-        files_by_bucket = self._assemble_manifest_stats(
-            spark, out_dir, rel_out, schema, bucket_stats, value_sets
-        )
-        schema_version = snap["schema_version"]
-        buckets_meta = {}
-        for b, (rows, checksum) in bucket_stats.items():
-            entry = {
-                "files": sorted(files_by_bucket.get(b, [])),
-                "schema_version": schema_version,
-                "rows": rows,
-                "checksum": checksum,
-            }
-            buckets_meta[str(b)] = entry
-        wm_max = max(
-            (int(v) for v in snap["watermarks"].values()), default=-1
-        )
-        snapshot = {
-            "version": version,
-            "parent": snap["version"],
-            "schema_version": schema_version,
-            "schemas": snap["schemas"],
-            "buckets": buckets_meta,
-            # EVERY new bucket gets the fence, including empty ones — an
-            # empty bucket left at -1 would admit redelivered updates for
-            # keys whose delete already applied (resurrection)
-            "watermarks": {str(b): wm_max for b in range(new_num_buckets)},
-            "applied_batches": snap["applied_batches"],
-            "num_buckets": new_num_buckets,
-            "key_cols": self.key_cols,
-            "seq_col": self.seq_col,
-            "total_rows": total,
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        self._publish(snapshot)
-        return version
+        return res.snapshot["version"]
 
     def _validate_cluster(
         self, snap: dict, cols: list[str], strategy: str
@@ -2793,10 +2552,7 @@ class LakeTable:
             )
         if not cols:
             raise ValueError("cluster_by must name at least one column")
-        schema = StructType.fromJson(
-            snap["schemas"][str(snap["schema_version"])]
-        )
-        fields = {f.name: f.dataType for f in schema.fields}
+        fields = {f.name: f.dataType for f in _schema_of(snap).fields}
         missing = [c for c in cols if c not in fields]
         if missing:
             raise ValueError(f"cluster_by columns not in schema: {missing}")
@@ -2821,11 +2577,7 @@ class LakeTable:
         """Default rows-per-file for a clustered rewrite: the candidate
         buckets' mean row count split into ``CLUSTER_FILES_PER_BUCKET``
         files (manifest arithmetic only — no job)."""
-        total = sum(
-            int(m["rows"]) + sum(int(d["rows"]) for d in m.get("deltas", []))
-            for b in candidates
-            for m in [snap["buckets"][str(b)]]
-        )
+        total = sum(_file_rows(snap["buckets"][str(b)]) for b in candidates)
         per_bucket = total / max(len(candidates), 1)
         return max(int(per_bucket // CLUSTER_FILES_PER_BUCKET), 1)
 
@@ -2870,6 +2622,9 @@ class LakeTable:
         their own files (time travel), which ``expire_snapshots`` +
         ``vacuum_orphans`` later reclaim. Crash-safe: files land in a
         fresh version directory before the atomic snapshot publish.
+        Concurrent-safe: a commit that lands meanwhile on other buckets
+        is rebased over; one that rewrote a candidate bucket makes the
+        compaction lose with ``CommitConflict`` (see ``_commit``).
         Returns the committed version (current version if no candidate).
 
         Clustering (Iceberg sort-order rewrite / Delta OPTIMIZE ZORDER
@@ -2926,9 +2681,7 @@ class LakeTable:
         )
         if not candidates:
             return snap["version"]
-        schema = StructType.fromJson(snap["schemas"][str(current_sv)])
-        version = self._next_version()
-        rel_out, out_dir = self._new_data_dir(version)
+        schema = _schema_of(snap)
         rows_df = self.read(spark, buckets=candidates)
         sort_cols: list[str] | None = None
         max_rpf: int | None = None
@@ -2949,64 +2702,41 @@ class LakeTable:
                 sort_cols = [ZVALUE_COL]
             else:
                 sort_cols = list(cluster_spec["by"])
-        rows_df = rows_df.repartition(
-            self.num_buckets, *[F.col(c) for c in self.key_cols]
-        )
-        self._write_bucketed(
+
+        def _no_content_drift(new_stats: dict) -> None:
+            # verification read-back: a rewrite without pending deltas
+            # must be content-identical, so its fresh per-bucket stats
+            # must EQUAL the manifest's
+            drift = []
+            for b in candidates:
+                meta = snap["buckets"][str(b)]
+                if meta.get("deltas"):
+                    continue  # delta fold: new state by design, stats are fresh
+                got = new_stats.get(b, (0, "0"))
+                want_rows, want_ck = int(meta["rows"]), str(meta["checksum"])
+                # a bucket whose files were all written at an older schema
+                # version changes canonical bytes when new nullable
+                # columns appear — rows must still match; checksum
+                # re-certifies only on an unchanged schema version
+                if got[0] != want_rows or (
+                    int(meta["schema_version"]) == current_sv and got[1] != want_ck
+                ):
+                    drift.append((b, (want_rows, want_ck), got))
+            if drift:
+                raise RuntimeError(f"compaction content drift: {drift}")
+
+        res = self._commit(
             spark,
-            rows_df,
-            out_dir,
-            sort_cols=sort_cols,
-            max_records_per_file=max_rpf,
+            snap,
+            None,
+            df=rows_df.repartition(self.num_buckets, *self.key_cols),
+            schema=schema,
+            touched=candidates,
+            cluster=cluster_spec,
+            write_opts={"sort_cols": sort_cols, "max_records_per_file": max_rpf},
+            check=_no_content_drift,
         )
-        # verification read-back: the rewrite must be content-identical,
-        # so the fresh per-bucket stats must EQUAL the manifest's
-        new_stats, value_sets = self._readback_bucket_stats(spark, out_dir, schema)
-        drift = []
-        for b in candidates:
-            meta = snap["buckets"][str(b)]
-            if meta.get("deltas"):
-                continue  # delta fold: new state by design, stats are fresh
-            got = new_stats.get(b, (0, "0"))
-            want_rows, want_ck = int(meta["rows"]), str(meta["checksum"])
-            # a bucket whose files were all written at an older schema
-            # version changes canonical bytes when new nullable columns
-            # appear — rows must still match; checksum re-certifies only
-            # on an unchanged schema version
-            if got[0] != want_rows or (
-                int(meta["schema_version"]) == current_sv and got[1] != want_ck
-            ):
-                drift.append((b, (want_rows, want_ck), got))
-        if drift:
-            raise RuntimeError(f"compaction content drift: {drift}")
-        files_by_bucket = self._assemble_manifest_stats(
-            spark, out_dir, rel_out, schema, new_stats, value_sets,
-            extra_cols=cluster_spec["by"] if cluster_spec else None,
-        )
-        buckets_meta = dict(snap["buckets"])
-        for b in candidates:
-            entry = {
-                "files": sorted(files_by_bucket.get(b, [])),
-                "schema_version": current_sv,
-                "rows": new_stats.get(b, (0, "0"))[0],
-                "checksum": new_stats.get(b, (0, "0"))[1],
-            }
-            if cluster_spec is not None:
-                entry["cluster"] = dict(cluster_spec)
-            buckets_meta[str(b)] = entry
-        snapshot = self._child_snapshot(snap)
-        snapshot.update(
-            version=version,
-            parent=snap["version"],
-            buckets=buckets_meta,
-            total_rows=sum(
-                int(m["rows"]) + sum(int(d["rows"]) for d in m.get("deltas", []))
-                for m in buckets_meta.values()
-            ),
-            committed_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        )
-        self._publish(snapshot)
-        return version
+        return res.snapshot["version"]
 
     # ---------------------------------------------------------- row DML
 
@@ -3077,59 +2807,6 @@ class LakeTable:
         if unknown := set(set_exprs) - set(schema.fieldNames()):
             raise ValueError(f"unknown columns in SET: {sorted(unknown)}")
 
-    def _commit_bucket_rewrite(
-        self,
-        spark: SparkSession,
-        snap: dict,
-        touched: "list[int]",
-        new_rows: DataFrame,
-        commit_id: str,
-        dml,
-        branch: str | None,
-    ) -> int:
-        """Shared DML commit tail (delete/update/merge): bucketed write
-        of the rewritten rows, read-back certification, manifest
-        assembly, snapshot publish. ONE implementation on purpose — the
-        bucket-entry shape and the per-commit ``dml`` provenance rule
-        must not drift between the DML verbs."""
-        current_sv = int(snap["schema_version"])
-        schema = StructType.fromJson(snap["schemas"][str(current_sv)])
-        version = self._next_version()
-        rel_out, out_dir = self._new_data_dir(version)
-        new_rows = new_rows.repartition(
-            self.num_buckets, *[F.col(c) for c in self.key_cols]
-        )
-        self._write_bucketed(spark, new_rows, out_dir)
-        new_stats, value_sets = self._readback_bucket_stats(spark, out_dir, schema)
-        files_by_bucket = self._assemble_manifest_stats(
-            spark, out_dir, rel_out, schema, new_stats, value_sets
-        )
-        buckets_meta = dict(snap["buckets"])
-        for b in touched:
-            buckets_meta[str(b)] = {
-                "files": sorted(files_by_bucket.get(b, [])),
-                "schema_version": current_sv,
-                "rows": new_stats.get(b, (0, "0"))[0],
-                "checksum": new_stats.get(b, (0, "0"))[1],
-            }
-        snapshot = self._child_snapshot(snap)
-        snapshot.update(
-            version=version,
-            parent=snap["version"],
-            buckets=buckets_meta,
-            applied_batches=self._trim_batches(snap["applied_batches"], commit_id),
-            total_rows=sum(
-                int(m["rows"]) + sum(int(d["rows"]) for d in m.get("deltas", []))
-                for m in buckets_meta.values()
-            ),
-            # callable dml: provenance that depends on observe() metrics
-            # only available after the write action (merge clause counts)
-            dml=dml() if callable(dml) else dml,
-            committed_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        )
-        self._publish(snapshot, ref=branch)
-        return version
-
     def _dml_rewrite(
         self,
         spark: SparkSession,
@@ -3148,8 +2825,7 @@ class LakeTable:
             return DmlStats(
                 commit_id=commit_id, applied=False, version=snap["version"]
             )
-        current_sv = int(snap["schema_version"])
-        schema = StructType.fromJson(snap["schemas"][str(current_sv)])
+        schema = _schema_of(snap)
         # WHERE columns must exist in the CURRENT schema, else a typo'd
         # column prunes every file and "succeeds" as a zero-match commit
         # — a compliance purge that checked nothing
@@ -3187,10 +2863,11 @@ class LakeTable:
             touched = sorted(int(r["_b"]) for r in counts if r["count"] > 0)
             matched = sum(int(r["count"]) for r in counts)
         if not touched:
-            self._commit_noop(snap, commit_id, ref=branch)
-            cur = self._head(branch)
+            res = self._commit(spark, snap, branch, commit_id)
             return DmlStats(
-                commit_id=commit_id, applied=True, version=cur["version"]
+                commit_id=commit_id,
+                applied=res.applied,
+                version=res.snapshot["version"],
             )
         rows = self.read(spark, buckets=touched, version=snap["version"])
         # SQL three-valued logic: a NULL predicate matches nothing —
@@ -3216,26 +2893,28 @@ class LakeTable:
                     for f in schema.fields
                 ]
             )
-        version = self._commit_bucket_rewrite(
+        dml = {
+            "op": "delete" if set_exprs is None else "update",
+            "where": [list(p) for p in preds],
+            "matched": matched,
+            "buckets": touched,
+        }
+        res = self._commit(
             spark,
             snap,
-            touched,
-            new_rows,
+            branch,
             commit_id,
-            dml={
-                "op": "delete" if set_exprs is None else "update",
-                "where": [list(p) for p in preds],
-                "matched": matched,
-                "buckets": touched,
-            },
-            branch=branch,
+            df=new_rows.repartition(self.num_buckets, *self.key_cols),
+            schema=schema,
+            touched=touched,
+            fields=lambda _head: {"dml": dml},
         )
         return DmlStats(
             commit_id=commit_id,
-            applied=True,
+            applied=res.applied,
             matched=matched,
             buckets_rewritten=len(touched),
-            version=version,
+            version=res.snapshot["version"],
         )
 
     def merge_into(
@@ -3301,8 +2980,7 @@ class LakeTable:
             return DmlStats(
                 commit_id=commit_id, applied=False, version=snap["version"]
             )
-        current_sv = int(snap["schema_version"])
-        schema = StructType.fromJson(snap["schemas"][str(current_sv)])
+        schema = _schema_of(snap)
         if when_matched_update:
             self._validate_set_exprs(schema, when_matched_update)
         if when_matched_update is None and matched_condition is not None:
@@ -3366,11 +3044,11 @@ class LakeTable:
             source_df = source_df.where(~anynull)
         touched = sorted(int(b) for b in (info["bs"] or []))
         if not touched:
-            self._commit_noop(snap, commit_id, ref=branch)
+            res = self._commit(spark, snap, branch, commit_id)
             return DmlStats(
                 commit_id=commit_id,
-                applied=True,
-                version=self._head(branch)["version"],
+                applied=res.applied,
+                version=res.snapshot["version"],
                 source_invalid=source_invalid,
             )
         tgt = (
@@ -3459,29 +3137,34 @@ class LakeTable:
                 # ends empty (Spark edge case; same guard as apply_batch)
                 return dict.fromkeys(kinds, 0)
 
-        version = self._commit_bucket_rewrite(
+        res = self._commit(
             spark,
             snap,
-            touched,
-            new_rows,
+            branch,
             commit_id,
-            dml=lambda: {
-                "op": "merge",
-                "buckets": touched,
-                "updated": _counts()["update"],
-                "deleted": _counts()["delete"],
-                "inserted": _counts()["insert"],
-                "source_invalid": source_invalid,
+            df=new_rows.repartition(self.num_buckets, *self.key_cols),
+            schema=schema,
+            touched=touched,
+            # the clause counts are observe() metrics, only available
+            # after the write action
+            fields=lambda _head: {
+                "dml": {
+                    "op": "merge",
+                    "buckets": touched,
+                    "updated": _counts()["update"],
+                    "deleted": _counts()["delete"],
+                    "inserted": _counts()["insert"],
+                    "source_invalid": source_invalid,
+                }
             },
-            branch=branch,
         )
         counts = _counts()
         return DmlStats(
             commit_id=commit_id,
-            applied=True,
+            applied=res.applied,
             matched=counts["update"] + counts["delete"] + counts["hold"],
             buckets_rewritten=len(touched),
-            version=version,
+            version=res.snapshot["version"],
             source_invalid=source_invalid,
         )
 
@@ -3538,11 +3221,8 @@ class LakeTable:
                 except OSError:
                     pass
         live: set[str] = set()
-        for f in os.listdir(self.ledger_dir):
-            m = re.fullmatch(r"v(\d{8})\.json", f)
-            if not m:
-                continue
-            snap = self.snapshot_at(int(m.group(1)))
+        for v in self._versions():
+            snap = self.snapshot_at(v)
             for meta in snap["buckets"].values():
                 live.update(meta["files"])
                 for d in meta.get("deltas", []):
@@ -3571,8 +3251,8 @@ class LakeTable:
                     removed += 1
         # a version dir no retained snapshot references holds only
         # write-protocol artifacts now (_SUCCESS markers, .crc shadows,
-        # swept parquet) — remove it whole. Safe under the table's
-        # single-writer model: the parquet sweep above already deletes
+        # swept parquet) — remove it whole. Vacuum runs quiesced (see
+        # the class docstring): the parquet sweep above already deletes
         # unreferenced data files, so an in-flight attempt dir could
         # not survive vacuum either way.
         for d in sorted(os.listdir(self.data_dir)):

@@ -10,6 +10,7 @@ query this file back as a DataFrame.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import time
@@ -36,17 +37,12 @@ class MetricsLog:
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
 
     def append(self, stats: ApplyStats, extra: dict | None = None) -> None:
+        """One JSON line per commit: every ``ApplyStats`` field (phase
+        timers, merge mode and OCC attempts included) plus ``ts`` and
+        ``events_per_sec``."""
         rec = {
+            **dataclasses.asdict(stats),
             "ts": round(time.time(), 3),
-            "batch_id": stats.batch_id,
-            "applied": stats.applied,
-            "events_in": stats.events_in,
-            "events_invalid": stats.events_invalid,
-            "events_fenced": stats.events_fenced,
-            "upserts": stats.upserts,
-            "deletes": stats.deletes,
-            "buckets_touched": stats.buckets_touched,
-            "rows_after": stats.rows_after,
             "seconds": round(stats.seconds, 4),
             "events_per_sec": round(stats.events_in / stats.seconds, 2)
             if stats.seconds > 0

@@ -87,9 +87,7 @@ def batch_df(ev, i: int, variant: str):
 def run(spark, ev, variant: str, tag: str) -> tuple[LakeTable, float, list[float]]:
     lake = os.path.join(BASE, f"lake_{tag}")
     shutil.rmtree(lake, ignore_errors=True)
-    table = LakeTable(
-        lake, num_buckets=32, key_cols=["repo", "path"], checksum_mode="readback"
-    )
+    table = LakeTable(lake, num_buckets=32, key_cols=["repo", "path"])
     per_batch: list[float] = []
     t0 = time.monotonic()
     for i in range(BATCHES):

@@ -69,8 +69,7 @@ def replay(spark, ev_path: str, tag: str) -> float:
     step = hi // BATCHES
     lake = os.path.join(BASE, f"lake_{tag}")
     shutil.rmtree(lake, ignore_errors=True)
-    table = LakeTable(lake, num_buckets=32, key_cols=["repo", "path"],
-                      checksum_mode="readback")
+    table = LakeTable(lake, num_buckets=32, key_cols=["repo", "path"])
     t0 = time.monotonic()
     for i in range(BATCHES):
         lo, up = i * step + 1, (i + 1) * step if i < BATCHES - 1 else hi

@@ -82,6 +82,25 @@ def test_refresh_rejects_mismatched_derived_key(spark, tmp_path):
         refresh_aggregates(spark, src, drv, ["lang", "repo"])
     with pytest.raises(ValueError, match="key_cols must equal group_cols"):
         full_refresh(spark, src, drv, ["lang", "repo"])
+    # the same columns in another order are the same key: accepted
+    perm = LakeTable(
+        str(tmp_path / "perm"), key_cols=["repo", "lang"], num_buckets=2,
+        seq_col="_src_version",
+    )
+    refresh_aggregates(spark, src, perm, ["lang", "repo"])
+    assert {(r.repo, r.lang, r.cnt) for r in perm.read(spark).collect()} == {
+        ("r1", "py", 1)
+    }
+    src.apply_batch(
+        spark,
+        spark.createDataFrame([("r2", "b", 2, "U", "py", 3)], SCH),
+        "b2",
+    )
+    full_refresh(spark, src, perm, ["lang", "repo"])
+    assert {(r.repo, r.lang, r.cnt) for r in perm.read(spark).collect()} == {
+        ("r1", "py", 1),
+        ("r2", "py", 1),
+    }
 
 
 def test_incremental_refresh_tracks_source(spark, tmp_path):

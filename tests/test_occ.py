@@ -52,8 +52,8 @@ def _interleave(writer: LakeTable, hook):
     orig = writer._write_bucketed
     fired = {"n": 0}
 
-    def wrapper(spark, merged, out_dir):
-        orig(spark, merged, out_dir)
+    def wrapper(spark, merged, out_dir, *args, **kwargs):
+        orig(spark, merged, out_dir, *args, **kwargs)
         if fired["n"] == 0:
             fired["n"] = 1
             hook()
@@ -461,3 +461,92 @@ def test_mor_delta_append_rebases(spark, tmp_path):
     assert {
         (r.repo, r.path, r.content) for r in t.read(spark).collect()
     } == got
+
+
+def _maintenance_setup(spark, path):
+    """An ingest handle and a maintenance handle on one table whose
+    bucket 1 carries a pending merge-on-read delta: ``compact()`` and
+    ``delete_where(path = k1)`` both rewrite bucket 1 alone."""
+    ingest = LakeTable(path, num_buckets=2)
+    maint = LakeTable(path, num_buckets=2)
+    buckets = _keys_by_bucket(spark, ingest)
+    k0, k1 = buckets[0][0], buckets[1][0]
+    ingest.apply_batch(
+        spark,
+        _rows(spark, [(k0[0], k0[1], 1, "U", "s0"), (k1[0], k1[1], 2, "U", "s1")]),
+        "seed",
+    )
+    ingest.apply_batch(
+        spark, _rows(spark, [(k1[0], k1[1], 3, "U", "d1")]), "delta", mode="mor"
+    )
+    return ingest, maint, k0, k1
+
+
+def _run_maintenance(spark, maint, op, k1):
+    if op == "compact":
+        return maint.compact(spark)
+    return maint.delete_where(spark, [("path", "=", k1[1])], "purge").version
+
+
+@pytest.mark.parametrize("op", ["compact", "delete_where"])
+def test_maintenance_rebases_over_disjoint_apply(spark, tmp_path, op):
+    """A compaction or a DML commit whose rewritten bucket no concurrent
+    commit touched rebases onto the new head like ingest does: an
+    apply_batch into another bucket that lands between the maintenance
+    write and its publish is kept, and the chain stays linear."""
+    path = str(tmp_path / "lake")
+    ingest, maint, k0, k1 = _maintenance_setup(spark, path)
+    before = maint.current_snapshot()["version"]
+    _interleave(
+        maint,
+        lambda: ingest.apply_batch(
+            spark, _rows(spark, [(k0[0], k0[1], 10, "U", "mid")]), "mid"
+        ),
+    )
+    version = _run_maintenance(spark, maint, op, k1)
+
+    t = LakeTable(path)
+    head = t.current_snapshot()
+    assert head["version"] == version
+    mid = t.snapshot_at(head["parent"])
+    assert mid["applied_batches"][-1] == "mid" and mid["parent"] == before
+    got = {(r.repo, r.path, r.content) for r in t.read(spark).collect()}
+    if op == "compact":
+        assert got == {(*k0, "mid"), (*k1, "d1")}
+        assert not any(m.get("deltas") for m in head["buckets"].values())
+    else:
+        assert got == {(*k0, "mid")}
+        assert head["dml"]["op"] == "delete" and "purge" in head["applied_batches"]
+    assert t.verify_bucket_checksums(spark) == []
+
+
+@pytest.mark.parametrize("op", ["compact", "delete_where"])
+def test_maintenance_conflicts_on_overlapping_apply(spark, tmp_path, op):
+    """When the concurrent apply_batch lands in the bucket the
+    maintenance commit rewrote, the maintenance commit must not rebase
+    (its files embed the old bucket state): it raises, the winner's
+    commit is intact, and the loser's attempt dir is gone."""
+    path = str(tmp_path / "lake")
+    ingest, maint, k0, k1 = _maintenance_setup(spark, path)
+    _interleave(
+        maint,
+        lambda: ingest.apply_batch(
+            spark, _rows(spark, [(k1[0], k1[1], 10, "U", "winner")]), "mid"
+        ),
+    )
+    with pytest.raises(CommitConflict, match="overlapping writers"):
+        _run_maintenance(spark, maint, op, k1)
+
+    t = LakeTable(path)
+    assert t.current_snapshot()["applied_batches"][-1] == "mid"
+    got = {(r.repo, r.path, r.content) for r in t.read(spark).collect()}
+    assert got == {(*k0, "s0"), (*k1, "winner")}
+    # every data dir on disk is referenced by a retained snapshot: the
+    # loser's attempt dir was removed at the conflict
+    referenced = {
+        f.split(os.sep)[1]
+        for v in t._versions()
+        for m in t.snapshot_at(v)["buckets"].values()
+        for f in [*m["files"], *(g for d in m.get("deltas", []) for g in d["files"])]
+    }
+    assert set(os.listdir(t.data_dir)) == referenced

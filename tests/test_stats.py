@@ -94,12 +94,10 @@ class TestManifestStats:
         t.apply_batch(spark, _events(spark, _spread_rows(50)), "b1")
         assert all(st is None for st in _all_file_stats(t).values())
 
-    @pytest.mark.parametrize("mode", ["readback", "observe"])
-    def test_both_checksum_modes_record_full_stats(self, spark, lake_dir, mode):
-        """Footer min/max AND value sets land in the sidecars whichever
-        checksum pipeline produced the bucket stats (readback rides the
-        codegen'd groupBy; observe rides CollectMetrics)."""
-        t = _mk_table(lake_dir, checksum_mode=mode)
+    def test_readback_records_full_stats(self, spark, lake_dir):
+        """Footer min/max AND value sets land in the sidecars from the
+        commit's read-back (the codegen'd groupBy over the written files)."""
+        t = _mk_table(lake_dir)
         t.apply_batch(spark, _events(spark, _spread_rows(100)), "b1")
         fstats = _all_file_stats(t)
         assert any(
@@ -108,7 +106,7 @@ class TestManifestStats:
         langs = {
             v for st in fstats.values() for v in st["lang"].get("values", [])
         }
-        assert langs == {"python"}, mode
+        assert langs == {"python"}
 
 
 class TestDataSkipping:

@@ -225,6 +225,25 @@ def test_time_frame_history_selection(tmp_path):
 
     assert check(_Ok()) is None
 
+    # append persists the WHOLE commit record, phase timers and OCC
+    # telemetry included, plus the derived ts / events_per_sec
+    from mex_extractors_spark.lake.table import ApplyStats
+
+    full = MetricsLog(str(tmp_path / "full.jsonl"))
+    full.append(
+        ApplyStats(
+            batch_id="b1", applied=True, events_in=10, seconds=2.0, mode="mor",
+            t_stats=0.1, t_write=0.2, t_checksum=0.3, commit_attempts=2,
+        ),
+        extra={"note": "x"},
+    )
+    (rec,) = full.history()
+    assert {
+        "mode": "mor", "t_stats": 0.1, "t_write": 0.2, "t_checksum": 0.3,
+        "commit_attempts": 2, "events_per_sec": 5.0, "note": "x",
+    }.items() <= rec.items()
+    assert "ts" in rec and rec["batch_id"] == "b1"
+
 
 def test_normalize_hook_runs_before_apply(spark, tmp_path):
     """Raw kebab-aliased events are normalized inside the engine."""
