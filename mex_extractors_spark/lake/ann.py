@@ -34,6 +34,8 @@ search index rather than recomputing it per query
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import math
 import os
@@ -344,6 +346,19 @@ class IvfIndex:
         state.setdefault("churn_since", 0)
         return state
 
+    @contextlib.contextmanager
+    def _sidecar_lock(self, suffix: str, blocking: bool = True):
+        """Advisory flock on ``ivf_clustered.json<suffix>``; yields
+        whether it was taken. It is per-open-fd, so a crash releases
+        it, and it serializes processes on one host only."""
+        with open(self._clustered_file + suffix, "w") as lk:
+            try:
+                fcntl.flock(lk, fcntl.LOCK_EX | (0 if blocking else fcntl.LOCK_NB))
+            except BlockingIOError:
+                yield False
+                return
+            yield True
+
     def recluster(
         self, spark: SparkSession, target_file_rows: int | None = None
     ) -> None:
@@ -353,7 +368,17 @@ class IvfIndex:
         churn passes ``recluster_fraction`` of the clustered rows —
         refreshed rows land in hash-bucketed files whose centroid range
         spans everything, so WITHOUT periodic reclustering the
-        files-pruned property silently decays toward a full scan."""
+        files-pruned property silently decays toward a full scan.
+        Waits for a recluster already running on this host."""
+        with self._sidecar_lock(".recluster"):
+            self._recluster(spark, target_file_rows)
+
+    def _recluster(self, spark: SparkSession, target_file_rows: int | None) -> None:
+        # the reset subtracts only the churn seen before the compaction:
+        # increments that concurrent refreshes save while it runs stay
+        # counted toward the next recluster
+        with self._sidecar_lock(".lock"):
+            seen = self._cluster_state()["churn_since"]
         num_centroids = len(self.centroids())
         rows = self.table.read(spark).count()
         if target_file_rows is None:
@@ -367,9 +392,12 @@ class IvfIndex:
             cluster_strategy="sort",
             target_file_rows=target_file_rows,
         )
-        _atomic_json(
-            self._clustered_file, {"rows_at_cluster": rows, "churn_since": 0}
-        )
+        with self._sidecar_lock(".lock"):
+            left = self._cluster_state()["churn_since"] - seen
+            _atomic_json(
+                self._clustered_file,
+                {"rows_at_cluster": rows, "churn_since": max(left, 0)},
+            )
 
     # ------------------------------------------------------------- refresh
 
@@ -501,22 +529,16 @@ class IvfIndex:
         # branches, both of whose apply_batches succeeded) would
         # otherwise LOSE one increment, and systematically lost churn
         # keeps maybe_recluster below threshold forever while file
-        # pruning silently decays toward a full scan. An advisory flock
-        # on a sidecar serializes the increment on one host; the lock
-        # is per-open-fd, so crash-release is automatic.
-        import fcntl
-
-        lock_path = self._clustered_file + ".lock"
-        with open(lock_path, "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
+        # pruning silently decays toward a full scan. The lock covers
+        # the increment only: a recluster is a full Spark compaction, and
+        # holding the lock across it would stall every concurrent
+        # refresh's increment for its whole duration.
+        with self._sidecar_lock(".lock"):
             state = self._cluster_state()
             state["churn_since"] += churn
-            if not defer and state["churn_since"] >= recluster_fraction * max(
-                state["rows_at_cluster"], 1
-            ):
-                self.recluster(spark)  # also resets the counter durably
-            else:
-                _atomic_json(self._clustered_file, state)
+            _atomic_json(self._clustered_file, state)
+        if not defer:
+            self.maybe_recluster(spark, recluster_fraction)
 
     def maybe_recluster(
         self,
@@ -533,14 +555,19 @@ class IvfIndex:
         ``catalog.absorb_main_advances()``: the recluster commits a
         content-identical snapshot to the table's MAIN, and the catalog
         pin must follow it or the next transaction forks from the stale
-        pin and its fast-forward diverges (orphaning this layout)."""
-        state = self._cluster_state()
-        if state["churn_since"] >= recluster_fraction * max(
-            state["rows_at_cluster"], 1
-        ):
-            self.recluster(spark, target_file_rows=target_file_rows)
+        pin and its fast-forward diverges (orphaning this layout).
+
+        Returns ``False`` without waiting while another recluster runs
+        on this host: that one compacts the table, and the churn saved
+        meanwhile stays counted for the next check."""
+        with self._sidecar_lock(".recluster", blocking=False) as mine:
+            state = self._cluster_state()
+            if not mine or state["churn_since"] < recluster_fraction * max(
+                state["rows_at_cluster"], 1
+            ):
+                return False
+            self._recluster(spark, target_file_rows)
             return True
-        return False
 
     def _rebuild_assignments(
         self,

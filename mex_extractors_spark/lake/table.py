@@ -34,7 +34,6 @@ import json
 import os
 import re
 import shutil
-import threading
 import time
 import uuid
 from collections.abc import Callable, Sequence
@@ -94,8 +93,8 @@ _BUCKET_NAME_RE = re.compile(r"_(\d+)(?:\..*)?\.parquet$")
 # parquet-type promotions Spark's vectorized reader performs natively
 # (verified on 4.1: int-family upcasts, int->double, float->double; NOT
 # long->double / int->float / date->timestamp). Buckets whose files need
-# an unsupported promotion are merged via the shuffle fallback, which
-# rewrites them to the current schema with explicit casts.
+# an unsupported promotion are read through ``read``'s explicit casts
+# instead of a bucketed scan (``_bucket_state``).
 _READER_WIDENINGS: set[tuple[str, str]] = {
     ("tinyint", "smallint"), ("tinyint", "int"), ("tinyint", "bigint"),
     ("smallint", "int"), ("smallint", "bigint"),
@@ -265,10 +264,6 @@ class LakeTable:
     # republishes METADATA only (the data files are attempt-unique and
     # already on storage), so retries cost no Spark job
     COMMIT_MAX_ATTEMPTS = 6
-
-    # crash-leftover scratch view dirs older than this are reclaimed at
-    # the next apply; younger ones may belong to a live concurrent writer
-    VIEW_SCRATCH_TTL_S = 3600.0
 
     # merge_mode="auto": append a delta instead of rewriting when the
     # touched buckets hold more than this many file rows per batch row
@@ -930,143 +925,135 @@ class LakeTable:
     def _bucket_expr(self) -> Column:
         """Bucket id = ``pmod(murmur3(key), num_buckets)`` — the EXACT
         expression behind Spark's ``hashpartitioning`` AND its bucketed
-        table layout. Three things key on this identity: watermark
+        table layout. Four things key on this identity: watermark
         fencing/stats assign events to buckets with it, the merge
-        aggregation's exchange places reduce partition i ≡ bucket i, and
-        the bucketed writer tags file names with the same id — so the
-        sort-merge MERGE joins batch partitions to table buckets with no
-        realignment, and the bucketed write adds no exchange. One payload
-        shuffle per micro-batch, over the batch alone (asserted by
-        tests/test_lake.py::test_merge_shuffles_only_the_batch and
+        aggregation's exchange places reduce partition i ≡ bucket i, the
+        bucketed writer tags file names with the same id, and
+        ``_bucketed_scan`` reads bucket i from the files tagged i — so
+        the sort-merge MERGE joins batch partitions to table buckets with
+        no realignment, and the bucketed write adds no exchange. One
+        payload shuffle per micro-batch, over the batch alone (asserted
+        by tests/test_lake.py::test_merge_shuffles_only_the_batch and
         test_bucket_file_tags_match_hash_expr)."""
         return F.pmod(F.hash(*[F.col(c) for c in self.key_cols]), F.lit(self.num_buckets))
 
     def _drop_stale_scratch_tables(self, spark: SparkSession) -> None:
-        """Drop mex_lake_cur_*/mex_lake_out_* catalog entries leaked by
-        a hard kill between CREATE and the finally-DROP (harmless in an
-        in-memory catalog; a persistent metastore would accumulate).
-        Runs once per table instance — a listTables round-trip is
-        driver-side serial cost we do not want on every batch."""
+        """Drop mex_lake_out_* catalog entries leaked by a hard kill
+        between ``_write_bucketed``'s CREATE and its finally-DROP
+        (harmless in an in-memory catalog; a persistent metastore would
+        accumulate). Runs once per table instance — a listTables
+        round-trip is driver-side serial cost we do not want on every
+        batch."""
         if getattr(self, "_scratch_cleaned", False):
             return
         self._scratch_cleaned = True
         try:
             for t in spark.catalog.listTables():
-                if t.name.startswith(("mex_lake_cur_", "mex_lake_out_")):
+                if t.name.startswith("mex_lake_out_"):
                     spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
         except Exception:  # noqa: BLE001 — cleanup is best-effort
             pass
 
-    # lazy CDF DataFrames an instance supports concurrently: scratch from
-    # all but the newest (K-1) read_changes calls is reclaimed on the
-    # next call, so callers may hold this many un-evaluated CDF frames
-    _CDF_SCRATCH_KEEP = 2
-
-    def _release_cdf_scratch(
-        self, spark: SparkSession, keep_last: int = 0
-    ) -> None:
-        """Drop the catalog tables + view dirs registered by previous
-        ``read_changes`` fast-path calls. They can't be dropped inside
-        ``read_changes`` itself (the returned DataFrame reads them
-        lazily), so they're released generationally: each new
-        read_changes keeps the newest ``keep_last`` generations alive
-        (supporting ``_CDF_SCRATCH_KEEP`` concurrently-held lazy CDF
-        frames) and reclaims the rest; apply_batch releases ALL of them
-        (it rmtree's the view dirs anyway, invalidating old frames).
-        Without this, a long session doing per-version CDF reads
-        accumulates mex_lake_cur_* catalog entries unboundedly."""
-        gens: list = getattr(self, "_cdf_scratch_gens", [])
-        cut = max(len(gens) - keep_last, 0) if keep_last else len(gens)
-        for gen in gens[:cut]:
-            for view_dir, tbl in gen:
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS `{tbl}`")
-                except Exception:  # noqa: BLE001 — cleanup is best-effort
-                    pass
-                shutil.rmtree(view_dir, ignore_errors=True)
-        self._cdf_scratch_gens = gens[cut:]
-
-    def _start_scratch_heartbeat(self, view_dir: str) -> threading.Event:
-        """Bump the scratch view dir's mtime every TTL/4 while the merge
-        job runs. The age-gated crash-leftover cleanup in ``apply_batch``
-        reclaims ``_views`` dirs older than ``VIEW_SCRATCH_TTL_S``; a
-        single apply can legitimately run longer than that at scale, and
-        a concurrent bucket-partitioned writer must not yank a live
-        writer's view mid-scan — so liveness (the heartbeat), not age
-        alone, is the reclamation signal. Returns the stop event; the
-        thread is a daemon, so a SIGKILLed writer stops beating and its
-        dir ages out normally."""
-        stop = threading.Event()
-
-        def _beat() -> None:
-            while not stop.wait(self.VIEW_SCRATCH_TTL_S / 4):
-                try:
-                    os.utime(view_dir)
-                except OSError:
-                    return  # dir gone — owner finished or was reclaimed
-
-        threading.Thread(
-            target=_beat, daemon=True, name="scratch-heartbeat"
-        ).start()
-        return stop
-
-    def _register_current_view(
+    def _bucketed_scan(
         self,
         spark: SparkSession,
         snap: dict,
-        touched: Sequence[int],
-        table_schema: StructType,
-    ) -> tuple[str, str]:
-        """Expose the touched buckets' live files as a BUCKETED catalog
-        table so the merge join reads them hash-aligned, shuffle-free.
+        buckets: Sequence[int],
+        schema: StructType,
+    ) -> DataFrame:
+        """The buckets' base files read as ``schema`` through a BUCKETED
+        scan, straight from the manifest: the file scan's relation is
+        rebuilt with the table's bucket spec, so Spark assigns each file
+        to the bucket its ``_NNNNN`` name tag carries, wherever its
+        version dir is. A key-equi join against a batch hash-partitioned
+        by the same murmur3-pmod (or against another such scan) then
+        plans no exchange on this side — the local-filesystem analogue
+        of Iceberg's storage-partitioned joins, with no catalog entry.
 
-        Live files are hard-linked (copied as a fallback) into a scratch
-        view directory — copy-on-write leaves each snapshot's live set
-        scattered across version directories, while a bucketed table
-        needs one location. File names keep their ``_NNNNN`` bucket tag,
-        which is how Spark assigns them to buckets. On a real cluster
-        this whole hop is Iceberg's bucket partition transform + storage-
-        partitioned joins; link-a-view is the local-filesystem stand-in.
-        """
-        tag = uuid.uuid4().hex[:12]
-        view_dir = os.path.join(self.path, "_views", tag)
-        os.makedirs(view_dir)
-        for b in touched:
-            meta = snap["buckets"].get(str(b))
-            for rel in meta["files"] if meta else []:
-                src = os.path.join(self.path, rel)
-                dst = os.path.join(view_dir, os.path.basename(rel))
-                try:
-                    os.link(src, dst)
-                except OSError:
-                    shutil.copy2(src, dst)
-        cur_tbl = f"mex_lake_cur_{tag}"
+        A clustered bucket's files are sorted by the CLUSTER order, not
+        the key — declaring the key sort would let Spark elide the
+        sort-merge join's sort whenever a bucket holds exactly one file,
+        silently mis-merging. The key sort is declared only when no
+        wanted bucket is clustered. As in ``read``, above 32 files (the
+        ``parallelPartitionDiscovery.threshold``) Spark lists the files
+        in one extra Spark job of a task per file."""
+        metas = [snap["buckets"][str(b)] for b in buckets]
+        jvm = spark._jvm
+        rel = (
+            spark.read.schema(schema)
+            .parquet(*[os.path.join(self.path, f) for m in metas for f in m["files"]])
+            ._jdf.queryExecution()
+            .analyzed()
+        )
+        fs = rel.relation()
+        keys = jvm.PythonUtils.toSeq(self.key_cols)
+        sort = jvm.PythonUtils.toSeq(
+            [] if any(m.get("cluster") for m in metas) else self.key_cols
+        )
+        spec = jvm.org.apache.spark.sql.catalyst.catalog.BucketSpec(
+            self.num_buckets, keys, sort
+        )
+        bucketed = fs.copy(
+            fs.location(), fs.partitionSchema(), fs.dataSchema(),
+            jvm.scala.Some(spec), fs.fileFormat(), fs.options(), fs.sparkSession(),
+        )
+        plan = rel.copy(
+            bucketed, rel.output(), rel.catalogTable(), rel.isStreaming(), rel.stream()
+        )
+        return DataFrame(
+            jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan),
+            spark,
+        )
 
-        def _ident(name: str) -> str:  # backtick-escape identifiers
-            return "`" + name.replace("`", "``") + "`"
+    def _bucket_state(
+        self,
+        spark: SparkSession,
+        snap: dict,
+        buckets: Sequence[int] | None,
+        schema: StructType,
+    ) -> DataFrame | None:
+        """State of ``snap``'s wanted buckets (None = all) aligned to
+        ``schema`` — the table side of the copy-on-write merge and both
+        sides of ``read_changes``. A bucketed scan (``_bucketed_scan``)
+        when the snapshot has the live layout, no wanted bucket carries
+        deltas and every file schema is reader-compatible; else the
+        delta-merging, cast-aligning ``read``. None when the wanted
+        buckets hold no rows."""
+        wanted = None if buckets is None else set(buckets)
+        metas = {
+            int(b): m
+            for b, m in snap["buckets"].items()
+            if wanted is None or int(b) in wanted
+        }
+        if not any(m["files"] or m.get("deltas") for m in metas.values()):
+            return None
+        if (
+            int(snap["num_buckets"]) == self.num_buckets
+            and not any(m.get("deltas") for m in metas.values())
+            and all(
+                _reader_compatible(_schema_of(snap, int(m["schema_version"])), schema)
+                for m in metas.values()
+                if m["files"]
+            )
+        ):
+            return self._bucketed_scan(spark, snap, sorted(metas), schema)
+        return align_to_schema(
+            self.read(spark, buckets=sorted(metas), version=snap["version"]), schema
+        )
 
-        cols = ", ".join(
-            f"{_ident(f.name)} {f.dataType.simpleString()}"
-            for f in table_schema.fields
+    @staticmethod
+    def _changed_buckets(from_snap: dict, to_snap: dict) -> list[int] | None:
+        """Buckets whose stored content differs between two snapshots
+        (a manifest diff, no I/O); None across a layout change, where
+        bucket ids are incomparable and every bucket counts as changed."""
+        if int(from_snap["num_buckets"]) != int(to_snap["num_buckets"]):
+            return None
+        old, new = from_snap["buckets"], to_snap["buckets"]
+        return sorted(
+            int(b)
+            for b in {*old, *new}
+            if _bucket_sig(old.get(b, {})) != _bucket_sig(new.get(b, {}))
         )
-        keys = ", ".join(_ident(c) for c in self.key_cols)
-        loc = view_dir.replace("'", "''")
-        # A clustered bucket's files are sorted by the CLUSTER order,
-        # not the key — declaring SORTED BY would let Spark elide the
-        # sort-merge join's sort whenever a bucket holds exactly one
-        # file, silently mis-merging. Declare sortedness only when
-        # every touched bucket is key-sorted (no cluster spec).
-        key_sorted = all(
-            not (snap["buckets"].get(str(b)) or {}).get("cluster")
-            for b in touched
-        )
-        sorted_clause = f"SORTED BY ({keys}) " if key_sorted else ""
-        spark.sql(
-            f"CREATE TABLE {cur_tbl} ({cols}) USING PARQUET "
-            f"CLUSTERED BY ({keys}) {sorted_clause}"
-            f"INTO {self.num_buckets} BUCKETS LOCATION '{loc}'"
-        )
-        return view_dir, cur_tbl
 
     def _new_data_dir(self, version: int) -> tuple[str, str]:
         """Unique data directory per write ATTEMPT (version + random
@@ -1599,8 +1586,9 @@ class LakeTable:
             # no committed data schema yet (brand-new table or a no-op
             # bootstrap head): a point lookup is empty, same as read()
             return spark.createDataFrame([], StructType([]))
-        # same murmur3-pmod the layout uses, evaluated on a literal row
-        # (no table scan — a 1-row local plan). Literals are CAST to the
+        # same murmur3-pmod the layout uses, evaluated on a literal row:
+        # a VALUES relation collects on the driver with no Spark job
+        # (spark.range(1) would run one). Literals are CAST to the
         # stored column types first: murmur3 hashes ints and longs
         # differently, so an uncast Python int probing a LongType key
         # would hash to the wrong bucket and silently return empty.
@@ -1609,7 +1597,7 @@ class LakeTable:
             F.lit(key_values[c]).cast(types[c]) if c in types else F.lit(key_values[c])
             for c in self.key_cols
         ]
-        bucket = spark.range(1).select(
+        bucket = spark.sql("SELECT * FROM VALUES (1) AS t(x)").select(
             F.pmod(F.hash(*lits), F.lit(self.num_buckets)).alias("b")
         ).first()["b"]
         # run the equalities through the stats pruner too: when the key
@@ -1660,31 +1648,13 @@ class LakeTable:
         snap = self._head(branch)
         if snap is not None and batch_id in snap["applied_batches"]:
             return ApplyStats(batch_id=batch_id, applied=False)
-        # scratch view dirs are transient per-apply; clear CRASH leftovers
-        # only (age-gated): a concurrent bucket-partitioned writer may
-        # have a live view dir in flight, and a blanket rmtree would
-        # yank its files mid-scan. Live writers heartbeat their dir's
-        # mtime every TTL/4 (_start_scratch_heartbeat), so age here
-        # means "no live owner for a full TTL", not "apply ran long"
-        views = os.path.join(self.path, "_views")
-        if os.path.isdir(views):
-            cutoff = time.time() - self.VIEW_SCRATCH_TTL_S
-            for d in os.listdir(views):
-                p = os.path.join(views, d)
-                try:
-                    if os.path.getmtime(p) < cutoff:
-                        shutil.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass
         self._drop_stale_scratch_tables(spark)
-        self._release_cdf_scratch(spark)
 
         # --- ingest contract: op and every key column must be non-null.
-        #     Malformed rows are dropped HERE, once, so the fast
-        #     (indicator-join) and fallback (groupBy) merge paths can
-        #     never diverge on them: the fast path's in-batch indicator
-        #     relies on op being non-null, and a full_outer equi-join
-        #     never matches null keys while groupBy treats them as equal.
+        #     Malformed rows are dropped HERE, once: a full_outer
+        #     equi-join never matches null keys while the batch LWW
+        #     groupBy treats them as equal, and the merge's winning-row
+        #     rule reads op.
         valid = F.col(self.op_col).isNotNull()
         for k in self.key_cols:
             valid = valid & F.col(k).isNotNull()
@@ -1783,9 +1753,6 @@ class LakeTable:
             for m in touched_metas.values()
         ):
             use_mor = False  # escalate: the rewrite folds the delta pile back in
-        touched_have_deltas = any(
-            m and m.get("deltas") for m in touched_metas.values()
-        )
 
         # --- schema evolution before apply (_commit registers the
         #     written schema in the head's schema log)
@@ -1797,41 +1764,25 @@ class LakeTable:
         else:
             table_schema = merge_schemas(_schema_of(snap), payload_schema)
 
-        # --- copy-on-write merge of touched buckets only: ONE payload
-        #     shuffle, over the BATCH alone. The batch is LWW-reduced by a
-        #     max_by aggregate (map-side partial combine pre-reduces hot
-        #     keys on every input split; its exchange is hashpartitioning
-        #     on the key with num_buckets partitions), then joined to the
-        #     current table with a sort-merge FULL OUTER join whose table
-        #     side is a BUCKETED parquet scan — bucket files are hash-
-        #     aligned with the agg's exchange (identical murmur3-pmod, see
-        #     _bucket_expr), so the table rows are merged IN PLACE, never
-        #     shuffled. At 100 TB (table >> batch) this is the difference
-        #     between moving each micro-batch and moving the whole table
-        #     every micro-batch; on a real cluster the same plan falls out
-        #     of Iceberg's bucket partition transform + storage-partitioned
-        #     joins. Fenced batch seqs are strictly above every current
-        #     row's seq (per-bucket watermark), so "row in batch wins" IS
-        #     last-writer-wins.
+        # --- merge of the touched buckets: ONE payload shuffle, over
+        #     the BATCH alone. The batch is LWW-reduced by a max_by
+        #     aggregate (map-side partial combine pre-reduces hot keys on
+        #     every input split; its exchange is hashpartitioning on the
+        #     key with num_buckets partitions). Merge-on-read appends that
+        #     reduced batch as the delta — deletes stay as tombstone rows,
+        #     the table side is never read, write cost is O(batch).
+        #     Copy-on-write joins it to the buckets' current state with a
+        #     sort-merge FULL OUTER join whose table side is a BUCKETED
+        #     scan (_bucket_state) hash-aligned with the agg's exchange
+        #     (identical murmur3-pmod, see _bucket_expr), so the table rows
+        #     merge IN PLACE, never shuffled. At 100 TB (table >> batch)
+        #     that is the difference between moving each micro-batch and
+        #     moving the whole table every micro-batch.
         schema_with_op = StructType([*table_schema.fields, fenced.schema[self.op_col]])
-        batch_aligned = align_to_schema(fenced.drop(_BUCKET), schema_with_op)
         batch_latest = lww_latest(
-            batch_aligned, key_cols=self.key_cols, seq_col=self.seq_col
-        )
-
-        touched_versions = set()
-        if snap:
-            for b in touched:
-                meta = snap["buckets"].get(str(b))
-                if meta and meta["files"]:
-                    touched_versions.add(int(meta["schema_version"]))
-        # delta-carrying buckets can't use the raw-file indicator join —
-        # their current state isn't materialized in the base files; the
-        # fallback goes through the delta-aware read() and the rewrite
-        # folds the deltas back into the base
-        fast = not touched_have_deltas and all(
-            _reader_compatible(_schema_of(snap, sv), table_schema)
-            for sv in touched_versions
+            align_to_schema(fenced.drop(_BUCKET), schema_with_op),
+            key_cols=self.key_cols,
+            seq_col=self.seq_col,
         )
 
         def _raise_watermarks(head: dict | None) -> dict:
@@ -1843,96 +1794,59 @@ class LakeTable:
             return {"watermarks": {str(k): v for k, v in wm.items()}}
 
         t_phase = time.monotonic()
-        view_dir, cur_tbl, hb_stop = None, None, None
-        try:
-            if use_mor:
-                # merge-on-read append: the LWW-reduced batch IS the
-                # delta — deletes stay as tombstone rows, the table side
-                # is never read, write cost is O(batch) no matter how
-                # big the table is. Same single exchange (the LWW
-                # aggregate), same bucket-aligned write.
-                merged = batch_latest
-            elif fast and touched_versions:
-                view_dir, cur_tbl = self._register_current_view(
-                    spark, snap, touched, table_schema
-                )
-                hb_stop = self._start_scratch_heartbeat(view_dir)
-                payload = [
-                    f.name for f in table_schema.fields if f.name not in self.key_cols
-                ]
-                cur = spark.table(cur_tbl).select(
-                    *self.key_cols,
-                    *[F.col(c).alias(f"__cur__{c}") for c in payload],
-                )
-                # explicit membership marker — independent of any payload
-                # column's nullability (op is validated non-null above,
-                # but the indicator should not hinge on that invariant)
-                in_batch = F.coalesce(F.col("_in_batch"), F.lit(False))
-                merged = (
-                    batch_latest.withColumn("_in_batch", F.lit(True))
-                    .join(cur, on=list(self.key_cols), how="full_outer")
-                    .where(~in_batch | (F.col(self.op_col) != "D"))
-                    .select(
-                        *self.key_cols,
-                        *[
-                            F.when(in_batch, F.col(c))
-                            .otherwise(F.col(f"__cur__{c}"))
-                            .alias(c)
-                            for c in payload
-                        ],
-                    )
-                )
-            elif touched_versions or touched_have_deltas:
-                # shuffle fallback: files needing a non-native promotion
-                # are read per schema version, cast explicitly, unioned
-                # with the batch and re-reduced — rewriting them to the
-                # current schema so the fast path resumes next batch.
-                # Delta-carrying buckets also land here (whatever their
-                # base files look like — a mor-first bucket's base is
-                # EMPTY, so gate on deltas, not base files): the
-                # delta-aware read() supplies the true current state and
-                # the rewrite folds the deltas into the new base
-                cur_aligned = align_to_schema(
-                    self.read(spark, buckets=touched).withColumn(
-                        self.op_col, F.lit("I")
-                    ),
-                    schema_with_op,
-                )
-                merged = apply_deletes(
-                    lww_latest(
-                        cur_aligned.unionByName(batch_aligned),
-                        key_cols=self.key_cols,
-                        seq_col=self.seq_col,
-                    ),
-                    op_col=self.op_col,
-                ).drop(self.op_col)
-            else:
-                # first write into these buckets: batch reduce only
-                merged = apply_deletes(batch_latest, op_col=self.op_col).drop(
-                    self.op_col
-                )
-            t_plan = time.monotonic() - t_phase
-            res = self._commit(
-                spark,
-                snap,
-                branch,
-                batch_id,
-                df=merged,
-                schema=table_schema,
-                touched=touched,
-                delta=use_mor,
-                # merge exchange sized to the bucket count
-                shuffle_partitions=self.num_buckets,
-                fields=_raise_watermarks,
-                crash_after_data=crash_after_data,
+        cur = (
+            None
+            if use_mor or snap is None
+            else self._bucket_state(spark, snap, touched, table_schema)
+        )
+        if use_mor:
+            merged = batch_latest
+        elif cur is None:
+            # first write into these buckets: the batch alone
+            merged = apply_deletes(batch_latest, op_col=self.op_col).drop(self.op_col)
+        else:
+            # last-writer-wins by seq, the rule read() merges deltas by:
+            # the batch row wins iff the key has no current row (or one
+            # with a null seq, which ranks lowest) or its seq is >= the
+            # current one — fencing is per BUCKET, so a DML-written row
+            # may outrank a later event — and a winning D drops the key
+            payload = [f.name for f in table_schema.fields if f.name not in self.key_cols]
+            cur = cur.select(
+                *self.key_cols, *[F.col(c).alias(f"__cur__{c}") for c in payload]
             )
-        finally:
-            if hb_stop is not None:
-                hb_stop.set()
-            if cur_tbl is not None:
-                spark.sql(f"DROP TABLE IF EXISTS {cur_tbl}")
-            if view_dir is not None:
-                shutil.rmtree(view_dir, ignore_errors=True)
+            wins = F.coalesce(F.col("_in_batch"), F.lit(False)) & F.coalesce(
+                F.col(self.seq_col) >= F.col(f"__cur__{self.seq_col}"), F.lit(True)
+            )
+            merged = (
+                batch_latest.withColumn("_in_batch", F.lit(True))
+                .join(cur, on=list(self.key_cols), how="full_outer")
+                .withColumn("_wins", wins)
+                .where(~F.col("_wins") | (F.col(self.op_col) != "D"))
+                .select(
+                    *self.key_cols,
+                    *[
+                        F.when(F.col("_wins"), F.col(c))
+                        .otherwise(F.col(f"__cur__{c}"))
+                        .alias(c)
+                        for c in payload
+                    ],
+                )
+            )
+        t_plan = time.monotonic() - t_phase
+        res = self._commit(
+            spark,
+            snap,
+            branch,
+            batch_id,
+            df=merged,
+            schema=table_schema,
+            touched=touched,
+            delta=use_mor,
+            # merge exchange sized to the bucket count
+            shuffle_partitions=self.num_buckets,
+            fields=_raise_watermarks,
+            crash_after_data=crash_after_data,
+        )
         if not res.applied:
             return ApplyStats(
                 batch_id=batch_id,
@@ -2293,11 +2207,7 @@ class LakeTable:
         from_snap = self.snapshot_at(from_version)
         if to_snap is None or from_snap is None:
             raise ValueError("both snapshot versions must be retained")
-        changed = [
-            int(b)
-            for b, meta in to_snap["buckets"].items()
-            if _bucket_sig(from_snap["buckets"].get(b, {})) != _bucket_sig(meta)
-        ]
+        changed = self._changed_buckets(from_snap, to_snap)
         return self.read(spark, buckets=changed, version=to_snap["version"])
 
     def read_changes(
@@ -2322,16 +2232,15 @@ class LakeTable:
 
         Scale shape: the manifest prunes the diff to buckets whose file
         list or content checksum differs between the two snapshots, and
-        when both snapshots share the live bucket layout the two sides
-        are read as bucketed tables, so the key-equi FULL OUTER join is
-        storage-partitioned — neither snapshot's rows shuffle
+        when both snapshots share the live bucket layout (and carry no
+        deltas in those buckets) the two sides are bucketed scans, so
+        the key-equi FULL OUTER join is storage-partitioned — neither
+        snapshot's rows shuffle
         (tests/test_lake.py::test_read_changes_is_shuffle_free). Across
         a ``rebucket`` boundary the layouts are incomparable and the
-        diff falls back to a full shuffled join.
-
-        The returned DataFrame is lazy over scratch bucketed views; it
-        stays valid until the next ``apply_batch``/``rebucket`` on this
-        table clears the scratch area — collect it first.
+        diff falls back to a full shuffled join. Like a ``read`` frame,
+        the result reads the snapshots' own files, so it stays valid
+        until ``vacuum_orphans`` reclaims them.
         """
         to_snap = (
             self.snapshot_at(to_version) if to_version is not None else self.current_snapshot()
@@ -2345,72 +2254,12 @@ class LakeTable:
                 [], StructType([])
             ).withColumn("_change_type", F.lit(""))
 
-        same_layout = int(from_snap["num_buckets"]) == int(to_snap["num_buckets"])
-        changed: list[int] | None = None
-        if same_layout:
-            all_b = set(from_snap["buckets"]) | set(to_snap["buckets"])
-            changed = sorted(
-                int(b)
-                for b in all_b
-                if _bucket_sig(from_snap["buckets"].get(b, {}))
-                != _bucket_sig(to_snap["buckets"].get(b, {}))
-            )
-
-        def _compatible(snap: dict) -> bool:
-            versions = {
-                int(m["schema_version"])
-                for b, m in snap["buckets"].items()
-                if m["files"] and (changed is None or int(b) in set(changed))
-            }
-            return all(
-                _reader_compatible(
-                    _schema_of(snap, sv), out_schema
-                )
-                for sv in versions
-            )
-
-        def _no_deltas(snap: dict) -> bool:
-            return not any(
-                m.get("deltas")
-                for b, m in snap["buckets"].items()
-                if changed is None or int(b) in set(changed)
-            )
-
-        fast = (
-            same_layout
-            and int(to_snap["num_buckets"]) == self.num_buckets
-            and _no_deltas(from_snap)  # raw-file views can't see deltas
-            and _no_deltas(to_snap)
-            and _compatible(from_snap)
-            and _compatible(to_snap)
+        changed = self._changed_buckets(from_snap, to_snap)
+        old_side, new_side = (
+            self._bucket_state(spark, snap, changed, out_schema)
+            or spark.createDataFrame([], out_schema)
+            for snap in (from_snap, to_snap)
         )
-        if fast:
-            # reclaim older CDF generations, keeping the newest K-1 so
-            # the last K read_changes frames stay lazily evaluable
-            self._release_cdf_scratch(
-                spark, keep_last=self._CDF_SCRATCH_KEEP - 1
-            )
-            wanted = changed if changed is not None else None
-            vd_old, tbl_old = self._register_current_view(
-                spark, from_snap, wanted or [], out_schema
-            )
-            vd_new, tbl_new = self._register_current_view(
-                spark, to_snap, wanted or [], out_schema
-            )
-            self._cdf_scratch_gens = [
-                *getattr(self, "_cdf_scratch_gens", []),
-                [(vd_old, tbl_old), (vd_new, tbl_new)],
-            ]
-            old_side, new_side = spark.table(tbl_old), spark.table(tbl_new)
-        else:
-            old_side = align_to_schema(
-                self.read(spark, buckets=changed, version=from_snap["version"]),
-                out_schema,
-            )
-            new_side = align_to_schema(
-                self.read(spark, buckets=changed, version=to_snap["version"]),
-                out_schema,
-            )
 
         payload = [f.name for f in out_schema.fields if f.name not in self.key_cols]
         o = old_side.select(
@@ -2645,10 +2494,10 @@ class LakeTable:
         z-ordered rewrite stores its Morton value as a physical
         ``_mex_zv`` column; every read path loads files with an
         explicit logical schema, so the extra column is invisible.
-        Clustered files are NOT key-sorted: the merge view declares
-        SORTED BY only for unclustered buckets (see
-        ``_register_current_view``) — the apply-side sort-merge join
-        re-sorts, which is the standard cost of clustering.
+        Clustered files are NOT key-sorted: the merge's bucketed scan
+        declares the key sort only for unclustered buckets (see
+        ``_bucketed_scan``) — the apply-side sort-merge join re-sorts,
+        which is the standard cost of clustering.
         """
         snap = self.current_snapshot()
         if snap is None or not snap["buckets"] or not snap.get("schema_version"):

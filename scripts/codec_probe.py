@@ -13,7 +13,7 @@ one pinned probe each:
   writer build a dictionary page per column chunk and then abandon it
   when it overflows — pure wasted CPU if no column dictionarizes well.
 
-Protocol (same as scripts/ab_probe.py / fresh_sweep.py): shared
+Protocol (same as the since-removed scripts/ab_probe.py / fresh_sweep.py): shared
 pre-generated 16M-event tmpfs corpus, each run a fresh subprocess
 taskset-pinned to 8 CPUs with a JIT warm-up before the clock, variants
 INTERLEAVED round-robin so a noisy host window degrades all variants

@@ -4,7 +4,7 @@
 Round-3 verdict item 3: reproduce 2->8 >= 0.8 on a clean fresh-only
 window (no stored-minima history), or restructure the headline. This
 script is the round-4 answer: the same protocol as the r2-vs-r3 A/B
-(`scripts/ab_probe.py` — whose interleaved r3 runs already measured a
+(`scripts/ab_probe.py`, since removed — whose interleaved r3 runs already measured a
 fresh 2->8 of 0.907 in a clean window), run on the round-4 HEAD engine:
 
 - one pre-generated 16M-event/2-segment corpus on tmpfs (shared with

@@ -84,8 +84,8 @@ def main() -> None:
         engine.replay(spark, ev2, 1001, 2000, batch_size=1000)
         cow_plan = captured[-1]
         # change-data-feed between the two delta-free cow snapshots
-        # (the shuffle-free fast path; a delta-carrying snapshot falls
-        # back to a shuffled merge by design)
+        # (both sides bucketed scans, shuffle-free; a delta-carrying
+        # snapshot is read through read()'s merge and shuffles by design)
         cdf_plan = formatted(table.read_changes(spark, from_version=1, to_version=2))
         # merge-on-read append: same batch shape, no table side at all
         table.apply_batch(

@@ -210,6 +210,34 @@ def test_refresh_churn_triggers_recluster(spark, tmp_path):
     assert len(files_before & set(idx.table.read(spark).inputFiles())) > 0
 
 
+def test_recluster_keeps_churn_saved_while_it_runs(spark, tmp_path, monkeypatch):
+    """The churn increment's flock covers the read-modify-write only: a
+    recluster (a full compaction) runs after it is released and resets
+    only the churn it saw, so an increment a concurrent refresh saves
+    during the compaction survives, and that refresh's own threshold
+    crossing skips instead of compacting (and conflicting) a second time."""
+    import fcntl
+
+    idx = IvfIndex(str(tmp_path / "ivf"), num_buckets=2)
+    idx.build(spark, _corpus(spark, n=40), num_centroids=4)
+    assert idx._cluster_state() == {"rows_at_cluster": 40, "churn_since": 0}
+    compact = idx.table.compact
+    during = []
+
+    def concurrent_refresh(*args, **kwargs):
+        if not during:
+            with open(idx._clustered_file + ".lock", "w") as lk:
+                fcntl.flock(lk, fcntl.LOCK_EX | fcntl.LOCK_NB)  # raises if held
+            idx._track_churn(spark, 3, 0.0)  # crosses the threshold as well
+            during.append(idx._cluster_state()["churn_since"])
+        return compact(*args, **kwargs)
+
+    monkeypatch.setattr(idx.table, "compact", concurrent_refresh)
+    idx._track_churn(spark, 20, 0.2)
+    assert during == [23]
+    assert idx._cluster_state() == {"rows_at_cluster": 40, "churn_since": 3}
+
+
 def test_unbuilt_index_raises(spark, tmp_path):
     idx = IvfIndex(str(tmp_path / "ivf"))
     with pytest.raises(ValueError, match="never built"):

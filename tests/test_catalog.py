@@ -462,7 +462,7 @@ def test_refresh_watermark_from_pin_when_main_lags(spark, cat_idx, monkeypatch):
 
 
 def test_catalog_current_heals_after_publish_crash(spark, cat, tmp_path):
-    """Crash window between os.link(cN.json) and the CURRENT replace:
+    """Crash window between the link of cN.json and the CURRENT replace:
     the linked snapshot IS committed (the link is the CAS point), so a
     lagging/missing CURRENT must be healed — otherwise every later
     transaction bases on the stale head and conflicts forever."""

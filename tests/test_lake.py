@@ -441,8 +441,8 @@ def test_expire_snapshots_keeps_current_and_vacuums(spark, tmp_path, events_parq
 
 def test_malformed_rows_dropped_consistently_on_both_merge_paths(spark, tmp_path):
     """Ingest contract: null op / null key rows are filtered once,
-    upfront — the fast (indicator-join) and fallback (groupBy) paths
-    can never diverge on them."""
+    upfront — the copy-on-write merge join (which never matches null
+    keys) and the first-write path can never diverge on them."""
     table = LakeTable(str(tmp_path / "lake"), num_buckets=4)
     base = spark.createDataFrame(
         [("r1", "a", 1, "U", "x"), ("r1", "b", 2, "U", "y")],
@@ -458,7 +458,7 @@ def test_malformed_rows_dropped_consistently_on_both_merge_paths(spark, tmp_path
         ],
         "repo string, path string, seq long, op string, content string",
     )
-    # fast path (no schema change)
+    # merge join (no schema change)
     st = table.apply_batch(spark, bad, "b2")
     rows = {(r.repo, r.path, r.content) for r in table.read(spark).collect()}
     assert rows == {("r1", "a", "x2"), ("r1", "b", "y")}
@@ -475,8 +475,7 @@ def test_malformed_rows_dropped_consistently_on_both_merge_paths(spark, tmp_path
     assert st_redeliver.events_invalid == 2
     assert st_redeliver.events_fenced == 1
 
-    # fallback path: force the union merge with an exotic promotion is
-    # environment-specific; instead check first-write path consistency
+    # first-write path consistency
     t2 = LakeTable(str(tmp_path / "lake2"), num_buckets=4)
     t2.apply_batch(spark, bad, "b1")
     rows2 = {(r.repo, r.path, r.content) for r in t2.read(spark).collect()}
@@ -1006,6 +1005,29 @@ def test_read_key_point_lookup_prunes_to_one_bucket(spark, tmp_path, events_parq
         table.read_key(spark, repo="only-half-the-key")
 
 
+def test_read_key_plans_without_a_spark_job(spark, tmp_path):
+    """read_key hashes its literal key on the driver: calling it (no
+    action yet) runs no Spark job at all."""
+    table = LakeTable(str(tmp_path / "lake"), num_buckets=4)
+    table.apply_batch(
+        spark,
+        spark.createDataFrame(
+            [("r", "a", 1, "U", "a1"), ("r", "b", 2, "U", "b1")],
+            "repo string, path string, seq long, op string, content string",
+        ),
+        "b1",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("read_key_probe", "read_key planning", False)
+    try:
+        df = table.read_key(spark, repo="r", path="a")
+        jobs = list(sc.statusTracker().getJobIdsForGroup("read_key_probe"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert [(r.path, r.content) for r in df.collect()] == [("a", "a1")]
+
+
 def test_everything_composes_mor_evolution_rebucket_compact_cdf_ivm_wap_stats_index(
     spark, tmp_path
 ):
@@ -1172,9 +1194,10 @@ def test_column_pruning_reaches_scan_through_mor_merge(spark, tmp_path):
 
 
 def test_concurrent_cdf_frames_stay_evaluable(spark, tmp_path):
-    """_CDF_SCRATCH_KEEP lazy read_changes frames can be held at once:
-    the second call must not reclaim the first call's scratch tables
-    (generational release); an older-than-K frame IS reclaimed."""
+    """read_changes frames read the snapshots' own files straight from
+    the manifest, so any number of them stay evaluable across later
+    applies and a compaction — and no scratch dir or catalog entry is
+    left behind."""
     table = LakeTable(str(tmp_path / "lake"), num_buckets=4)
     sch = "repo string, path string, seq long, op string, content string"
     for v, rows in enumerate(
@@ -1189,20 +1212,95 @@ def test_concurrent_cdf_frames_stay_evaluable(spark, tmp_path):
 
     df1 = table.read_changes(spark, from_version=1, to_version=2)
     df2 = table.read_changes(spark, from_version=2, to_version=3)
-    # BOTH frames evaluate after the second call registered its scratch
+    df3 = table.read_changes(spark, from_version=1, to_version=3)
+    # later writes: a copy-on-write apply, a merge-on-read apply and the
+    # compaction that folds it
+    table.apply_batch(
+        spark,
+        spark.createDataFrame(
+            [("r", k, 10 + i, "U", "z") for i, k in enumerate("abcd")], sch
+        ),
+        "b4",
+    )
+    table.apply_batch(
+        spark, spark.createDataFrame([("r", "a", 20, "D", None)], sch), "b5",
+        mode="mor",
+    )
+    table.compact(spark)
     assert {(r.path, r._change_type) for r in df1.collect()} == {
         ("b", "insert")
     }
-    assert {(r.path, r._change_type) for r in df2.collect()} == {
+    assert {(r.path, r._change_type, r.content) for r in df2.collect()} == {
+        ("a", "update_postimage", "a2"),
+        ("c", "insert", "c1"),
+    }
+    assert {(r.path, r._change_type) for r in df3.collect()} == {
         ("a", "update_postimage"),
+        ("b", "insert"),
         ("c", "insert"),
     }
-    # a third call reclaims generation 1 (bounded scratch), and the
-    # newest two keep working
-    df3 = table.read_changes(spark, from_version=1, to_version=3)
-    assert df3.count() == 3
-    assert df2.count() == 2
-    assert len(getattr(table, "_cdf_scratch_gens")) <= 2
+    # no scratch dir beside the ledger and the data files
+    assert sorted(os.listdir(table.path)) == ["_ledger", "data"]
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("mex_lake_")
+    ]
+
+
+def test_cow_and_mor_converge_when_a_merge_outranks_a_later_event(
+    spark, tmp_path
+):
+    """Last-writer-wins by seq on every merge path: merge_into writes
+    keys at seq 1000 without raising the bucket fence, so a later CDC
+    event at seq 500 passes the fence. It must lose to the merged row
+    (and its delete must not drop the key) whether the batch is
+    appended as a delta, rewritten over a delta-free bucket, or
+    rewritten over a bucket with a pending delta."""
+    sch = "repo string, path string, seq long, op string, content string"
+
+    def batch(rows):
+        return spark.createDataFrame(rows, sch)
+
+    states = {}
+    for name, modes in {
+        "cow": ("cow", "cow", "cow"),
+        "mor": ("mor", "mor", "mor"),
+        "cow_over_delta": ("cow", "mor", "cow"),
+    }.items():
+        t = LakeTable(str(tmp_path / name), num_buckets=1)
+        t.apply_batch(
+            spark, batch([("r", "a", 1, "U", "a1"), ("r", "b", 2, "U", "b1")]),
+            "b1", mode=modes[0],
+        )
+        t.merge_into(
+            spark,
+            batch(
+                [("r", "z", 1000, "U", "z-merged"), ("r", "w", 1000, "U", "w-merged")]
+            ).drop("op"),
+            "m1",
+        )
+        t.apply_batch(spark, batch([("r", "y", 3, "U", "y1")]), "b2", mode=modes[1])
+        assert bool(t.current_snapshot()["buckets"]["0"].get("deltas")) == (
+            modes[1] == "mor"
+        )
+        st = t.apply_batch(
+            spark,
+            batch([("r", "z", 500, "U", "z-late"), ("r", "w", 500, "D", None)]),
+            "b3",
+            mode=modes[2],
+        )
+        assert st.applied and st.events_fenced == 0 and st.mode == modes[2]
+        states[name] = sorted(
+            (r.path, r.seq, r.content) for r in t.read(spark).collect()
+        )
+    assert states["cow"] == [
+        ("a", 1, "a1"),
+        ("b", 2, "b1"),
+        ("w", 1000, "w-merged"),
+        ("y", 3, "y1"),
+        ("z", 1000, "z-merged"),
+    ]
+    assert states["mor"] == states["cow"]
+    assert states["cow_over_delta"] == states["cow"]
 
 
 def test_time_travel_by_timestamp(spark, tmp_path):
@@ -1414,52 +1512,3 @@ def test_inspect_metadata_tables(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="unknown metadata table"):
         t.inspect(spark, "nope")
-
-
-def test_scratch_heartbeat_keeps_live_view_alive(spark, tmp_path):
-    """The age-gated _views cleanup must not reclaim a dir whose owner
-    is still mid-job: the heartbeat bumps mtime every TTL/4, so only
-    dirs with no live owner for a full TTL age out."""
-    import os
-    import time as _time
-
-    t = LakeTable(str(tmp_path / "lake"), num_buckets=2)
-    t.apply_batch(
-        spark,
-        spark.createDataFrame(
-            [("r", "p", 1, "I", "c", "x", "b")],
-            "repo string, path string, seq long, op string, commit string, lang string, content string",
-        ),
-        "b1",
-    )
-    views = os.path.join(t.path, "_views")
-    os.makedirs(views, exist_ok=True)
-    live = os.path.join(views, "live")
-    dead = os.path.join(views, "dead")
-    os.makedirs(live)
-    os.makedirs(dead)
-    old = _time.time() - 10_000
-    os.utime(live, (old, old))
-    os.utime(dead, (old, old))
-
-    # a heartbeating owner (tiny TTL so the beat fires immediately)
-    t.VIEW_SCRATCH_TTL_S = 0.2
-    stop = t._start_scratch_heartbeat(live)
-    try:
-        _time.sleep(0.4)  # at least one beat lands
-        assert os.path.getmtime(live) > old + 1
-    finally:
-        stop.set()
-
-    # the next apply reclaims only the unbeaten dir
-    t.VIEW_SCRATCH_TTL_S = 3600.0
-    t.apply_batch(
-        spark,
-        spark.createDataFrame(
-            [("r", "p", 2, "U", "c", "x", "y")],
-            "repo string, path string, seq long, op string, commit string, lang string, content string",
-        ),
-        "b2",
-    )
-    assert os.path.isdir(live)
-    assert not os.path.isdir(dead)
