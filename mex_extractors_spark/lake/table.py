@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import base64
 import json
+import operator
 import os
 import re
 import shutil
@@ -41,7 +42,7 @@ from dataclasses import dataclass
 from functools import reduce
 from itertools import islice
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -74,10 +75,17 @@ from mex_extractors_spark.lake.stats import (
 from mex_extractors_spark.operators.lww import (
     apply_deletes,
     lww_latest,
-    lww_latest_window,
 )
 
 _BUCKET = "_bucket"
+
+_COMPARE = {
+    "=": operator.eq,
+    "<": operator.lt,
+    "<=": operator.le,
+    ">": operator.gt,
+    ">=": operator.ge,
+}
 
 # default files per bucket a clustered compaction aims for when no
 # explicit target_file_rows is given — enough in-bucket granularity for
@@ -134,6 +142,15 @@ def _schema_of(snap: dict | None, sv: int | None = None) -> StructType | None:
     schema); None before the snapshot's first data commit."""
     sv = sv or (snap or {}).get("schema_version")
     return StructType.fromJson(snap["schemas"][str(sv)]) if sv else None
+
+
+def _native(snap: dict, meta: dict, schema: StructType) -> bool:
+    """True when the parquet reader serves every base and delta file
+    group of bucket entry ``meta`` through ``schema`` with no cast."""
+    svs = [int(d["schema_version"]) for d in meta.get("deltas", [])]
+    if meta["files"]:
+        svs.append(int(meta["schema_version"]))
+    return all(_reader_compatible(_schema_of(snap, sv), schema) for sv in svs)
 
 
 def _file_rows(meta: dict) -> int:
@@ -929,7 +946,7 @@ class LakeTable:
         fencing/stats assign events to buckets with it, the merge
         aggregation's exchange places reduce partition i ≡ bucket i, the
         bucketed writer tags file names with the same id, and
-        ``_bucketed_scan`` reads bucket i from the files tagged i — so
+        ``_state_scan`` reads bucket i from the files tagged i — so
         the sort-merge MERGE joins batch partitions to table buckets with
         no realignment, and the bucketed write adds no exchange. One
         payload shuffle per micro-batch, over the batch alone (asserted
@@ -954,55 +971,107 @@ class LakeTable:
         except Exception:  # noqa: BLE001 — cleanup is best-effort
             pass
 
-    def _bucketed_scan(
+    def _state_scan(
         self,
         spark: SparkSession,
         snap: dict,
         buckets: Sequence[int],
         schema: StructType,
+        skip: set[str] | None = None,
+        bucketed: bool = True,
     ) -> DataFrame:
-        """The buckets' base files read as ``schema`` through a BUCKETED
-        scan, straight from the manifest: the file scan's relation is
-        rebuilt with the table's bucket spec, so Spark assigns each file
-        to the bucket its ``_NNNNN`` name tag carries, wherever its
-        version dir is. A key-equi join against a batch hash-partitioned
-        by the same murmur3-pmod (or against another such scan) then
-        plans no exchange on this side — the local-filesystem analogue
-        of Iceberg's storage-partitioned joins, with no catalog entry.
+        """State of ``snap``'s ``buckets`` as ``schema``, merged IN
+        PLACE from ONE parquet relation over their base files (minus the
+        pruner's ``skip``) and delta files; every file group must be
+        ``_native`` to ``schema``. With deltas pending the relation adds
+        a nullable op column (base rows read null) and ``_lww_state``
+        resolves each key.
 
-        A clustered bucket's files are sorted by the CLUSTER order, not
-        the key — declaring the key sort would let Spark elide the
-        sort-merge join's sort whenever a bucket holds exactly one file,
-        silently mis-merging. The key sort is declared only when no
-        wanted bucket is clustered. As in ``read``, above 32 files (the
-        ``parallelPartitionDiscovery.threshold``) Spark lists the files
-        in one extra Spark job of a task per file."""
+        ``bucketed``: the relation carries the snapshot's bucket spec, so
+        Spark assigns each file to the bucket its ``_NNNNN`` name tag
+        carries, wherever its version dir is: the LWW window, and a
+        key-equi join against a batch hash-partitioned by the same
+        murmur3-pmod (or against another such scan), run inside each
+        bucket with no exchange — Iceberg's storage-partitioned join,
+        with no catalog entry. Else the relation is coalesced to one
+        partition: one task for a single bucket, where a bucketed scan
+        launches one per bucket.
+
+        The key sort is declared only when no bucket is clustered (its
+        files follow the CLUSTER order: declaring the key sort would let
+        Spark elide the merge join's sort on one-file buckets and
+        mis-merge) or carries deltas (the window sorts anyway).
+
+        Above 32 root paths (``parallelPartitionDiscovery.threshold``)
+        Spark lists the files in one Spark job at planning. One relation
+        over base and delta files crosses that sooner than two apart (16
+        buckets of 1 base + 2 delta files: one listing job, where 16 + 32
+        paths need none); the in-place merge saves a job in turn, so
+        ``read().count()`` never runs more (BENCH/MOR_INPLACE_AB.md)."""
         metas = [snap["buckets"][str(b)] for b in buckets]
-        jvm = spark._jvm
-        rel = (
-            spark.read.schema(schema)
-            .parquet(*[os.path.join(self.path, f) for m in metas for f in m["files"]])
-            ._jdf.queryExecution()
-            .analyzed()
+        files = [
+            p
+            for m in metas
+            for f in m["files"]
+            if (p := os.path.join(self.path, f)) not in (skip or ())
+        ]
+        deltas = [
+            os.path.join(self.path, f)
+            for m in metas
+            for d in m.get("deltas", [])
+            for f in d["files"]
+        ]
+        if not files and not deltas:
+            return spark.createDataFrame([], schema)
+        read_schema = (
+            StructType([*schema.fields, StructField(self.op_col, StringType())])
+            if deltas
+            else schema
         )
-        fs = rel.relation()
-        keys = jvm.PythonUtils.toSeq(self.key_cols)
-        sort = jvm.PythonUtils.toSeq(
-            [] if any(m.get("cluster") for m in metas) else self.key_cols
+        df = spark.read.schema(read_schema).parquet(*files, *deltas)
+        if bucketed:
+            jvm = spark._jvm
+            rel = df._jdf.queryExecution().analyzed()
+            fs = rel.relation()
+            sort = [] if deltas or any(m.get("cluster") for m in metas) else self.key_cols
+            spec = jvm.org.apache.spark.sql.catalyst.catalog.BucketSpec(
+                int(snap["num_buckets"]),
+                jvm.PythonUtils.toSeq(self.key_cols),
+                jvm.PythonUtils.toSeq(sort),
+            )
+            fs = fs.copy(
+                fs.location(), fs.partitionSchema(), fs.dataSchema(),
+                jvm.scala.Some(spec), fs.fileFormat(), fs.options(), fs.sparkSession(),
+            )
+            plan = rel.copy(
+                fs, rel.output(), rel.catalogTable(), rel.isStreaming(), rel.stream()
+            )
+            df = DataFrame(
+                jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan),
+                spark,
+            )
+        else:
+            df = df.coalesce(1)
+        return self._lww_state(df, schema) if deltas else df
+
+    def _lww_state(self, rows: DataFrame, schema: StructType) -> DataFrame:
+        """Last-writer-wins over base rows (op null) and delta rows, as
+        ``schema``: per key the highest seq wins (null ranks lowest), a
+        delta row beats a base row of equal seq — as the copy-on-write
+        batch row does (``>=``), since ``merge_into`` writes at a
+        caller's seq without raising the fence — and a D winner drops
+        the key. Two delta rows of one key never tie: each delta is
+        fenced above the last. A row_number window, not max_by(struct(*)),
+        so a narrow select prunes payload columns into the scan
+        (tests/test_lake.py::test_column_pruning_reaches_scan_through_mor_merge)."""
+        op = F.col(self.op_col)
+        w = Window.partitionBy(*self.key_cols).orderBy(
+            F.col(self.seq_col).desc(), op.asc_nulls_last()
         )
-        spec = jvm.org.apache.spark.sql.catalyst.catalog.BucketSpec(
-            self.num_buckets, keys, sort
-        )
-        bucketed = fs.copy(
-            fs.location(), fs.partitionSchema(), fs.dataSchema(),
-            jvm.scala.Some(spec), fs.fileFormat(), fs.options(), fs.sparkSession(),
-        )
-        plan = rel.copy(
-            bucketed, rel.output(), rel.catalogTable(), rel.isStreaming(), rel.stream()
-        )
-        return DataFrame(
-            jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan),
-            spark,
+        return (
+            rows.withColumn("_rn", F.row_number().over(w))
+            .where((F.col("_rn") == 1) & ~op.eqNullSafe("D"))
+            .select(*schema.fieldNames())
         )
 
     def _bucket_state(
@@ -1014,11 +1083,10 @@ class LakeTable:
     ) -> DataFrame | None:
         """State of ``snap``'s wanted buckets (None = all) aligned to
         ``schema`` — the table side of the copy-on-write merge and both
-        sides of ``read_changes``. A bucketed scan (``_bucketed_scan``)
-        when the snapshot has the live layout, no wanted bucket carries
-        deltas and every file schema is reader-compatible; else the
-        delta-merging, cast-aligning ``read``. None when the wanted
-        buckets hold no rows."""
+        sides of ``read_changes``. A bucketed ``_state_scan``, deltas
+        pending or not, when every file group is ``_native`` to
+        ``schema``; else the cast-aligning ``read``. None when the
+        wanted buckets hold no rows."""
         wanted = None if buckets is None else set(buckets)
         metas = {
             int(b): m
@@ -1027,16 +1095,8 @@ class LakeTable:
         }
         if not any(m["files"] or m.get("deltas") for m in metas.values()):
             return None
-        if (
-            int(snap["num_buckets"]) == self.num_buckets
-            and not any(m.get("deltas") for m in metas.values())
-            and all(
-                _reader_compatible(_schema_of(snap, int(m["schema_version"])), schema)
-                for m in metas.values()
-                if m["files"]
-            )
-        ):
-            return self._bucketed_scan(spark, snap, sorted(metas), schema)
+        if all(_native(snap, m, schema) for m in metas.values()):
+            return self._state_scan(spark, snap, sorted(metas), schema)
         return align_to_schema(
             self.read(spark, buckets=sorted(metas), version=snap["version"]), schema
         )
@@ -1413,32 +1473,41 @@ class LakeTable:
             return spark.createDataFrame([], schema or StructType([]))
         wanted = set(buckets) if buckets is not None else None
         skip = self._prune_base_files(snap, wanted, preds) if preds else None
-        base = self._read_base(spark, snap, wanted, schema, skip=skip)
-        delta = self._read_deltas(spark, snap, wanted, schema)
-        if delta is None:
-            state = base
+        metas = {
+            int(b): m
+            for b, m in snap["buckets"].items()
+            if wanted is None or int(b) in wanted
+        }
+        if not any(m.get("deltas") for m in metas.values()):
+            # nothing to merge: a plain file scan per schema version
+            state = self._read_base(spark, snap, wanted, schema, skip=skip)
         else:
-            # merge-on-read: base rows lose to any delta row for the same
-            # key — watermark fencing guarantees every delta seq is
-            # strictly above the base row's seq, so plain LWW by seq is
-            # the merge. The WINDOW strategy (not max_by) on purpose:
-            # max_by(struct(*)) references every column structurally,
-            # which blocks Catalyst's column pruning — with row_number
-            # a narrow downstream select prunes untouched payload
-            # columns all the way into the parquet scans
-            # (tests/test_lake.py::test_column_pruning_reaches_scan_
-            # through_mor_merge). Rows per key here are 1 base + ≤k
-            # delta rows, so the write path's map-side-combine skew
-            # argument for max_by does not apply.
-            base_op = base.withColumn(self.op_col, F.lit("U"))
-            state = apply_deletes(
-                lww_latest_window(
-                    base_op.unionByName(delta),
-                    key_cols=self.key_cols,
-                    seq_col=self.seq_col,
-                ),
-                op_col=self.op_col,
-            ).select(*schema.fieldNames())
+            # merge-on-read: in place, with no exchange (``_state_scan``),
+            # except for buckets whose files need a non-native cast —
+            # read per schema version with explicit casts, unioned (base
+            # rows op = null) and LWW-merged behind a shuffle
+            native = sorted(b for b, m in metas.items() if _native(snap, m, schema))
+            cast = set(metas) - set(native)
+            parts = []
+            if native:
+                parts.append(
+                    self._state_scan(
+                        spark, snap, native, schema, skip=skip, bucketed=len(native) > 1
+                    )
+                )
+            if cast:
+                base = self._read_base(spark, snap, cast, schema, skip=skip)
+                delta = self._read_deltas(spark, snap, cast, schema)
+                parts.append(
+                    base
+                    if delta is None
+                    else self._lww_state(
+                        base.withColumn(self.op_col, F.lit(None).cast(StringType()))
+                        .unionByName(delta),
+                        schema,
+                    )
+                )
+            state = reduce(DataFrame.unionByName, parts)
         if preds:
             state = state.where(self._where_expr(preds))
         return state
@@ -1470,21 +1539,13 @@ class LakeTable:
         return skip
 
     def _where_expr(self, preds: list[tuple]) -> Column:
-        expr = F.lit(True)
-        for c, op, v in preds:
-            col = F.col(c)
-            if op == "in":
-                cond = col.isin(*v)
-            else:
-                cond = {
-                    "=": col == F.lit(v),
-                    "<": col < F.lit(v),
-                    "<=": col <= F.lit(v),
-                    ">": col > F.lit(v),
-                    ">=": col >= F.lit(v),
-                }[op]
-            expr = expr & cond
-        return expr
+        return reduce(
+            Column.__and__,
+            [
+                F.col(c).isin(*v) if op == "in" else _COMPARE[op](F.col(c), F.lit(v))
+                for c, op, v in preds
+            ],
+        )
 
     def _read_base(
         self,
@@ -1602,18 +1663,15 @@ class LakeTable:
         ).first()["b"]
         # run the equalities through the stats pruner too: when the key
         # columns carry blooms / value sets, a lookup of an ABSENT key
-        # proves itself empty from the manifest and scans zero files
-        # (the residual equality still applies either way)
-        preds = [
-            (c, "=", key_values[c])
-            for c in self.key_cols
-            if isinstance(key_values[c], (str, bool)) or (
-                isinstance(key_values[c], int)
-            )
-        ]
+        # proves itself empty from the manifest and scans zero files.
+        # read() applies them as the residual filter, one equality per
+        # key column; a key the pruner takes no stats for is filtered
+        # here instead
+        eqs = [(c, "=", key_values[c]) for c in self.key_cols]
+        preds = [p for p in eqs if isinstance(p[2], (str, int))]
         out = self.read(spark, buckets=[int(bucket)], where=preds or None)
-        for c in self.key_cols:
-            out = out.where(F.col(c) == F.lit(key_values[c]))
+        if rest := [p for p in eqs if p not in preds]:
+            out = out.where(self._where_expr(rest))
         return out
 
     # -------------------------------------------------------------- write
@@ -2232,13 +2290,15 @@ class LakeTable:
 
         Scale shape: the manifest prunes the diff to buckets whose file
         list or content checksum differs between the two snapshots, and
-        when both snapshots share the live bucket layout (and carry no
-        deltas in those buckets) the two sides are bucketed scans, so
-        the key-equi FULL OUTER join is storage-partitioned — neither
-        snapshot's rows shuffle
-        (tests/test_lake.py::test_read_changes_is_shuffle_free). Across
-        a ``rebucket`` boundary the layouts are incomparable and the
-        diff falls back to a full shuffled join. Like a ``read`` frame,
+        when both snapshots share a bucket layout the two sides are
+        bucketed scans — pending merge-on-read deltas resolve inside
+        each bucket (``_state_scan``) — so the key-equi FULL OUTER join
+        is storage-partitioned: neither snapshot's rows shuffle
+        (tests/test_lake.py::test_read_changes_is_shuffle_free,
+        test_mor_reads_are_shuffle_free). Only buckets whose files need
+        a non-native cast, and a diff across a ``rebucket`` boundary
+        (layouts incomparable), fall back to a shuffled join. Like a
+        ``read`` frame,
         the result reads the snapshots' own files, so it stays valid
         until ``vacuum_orphans`` reclaims them.
         """
@@ -2461,12 +2521,14 @@ class LakeTable:
         read-back stats become the new manifest entries (still
         certifying the bytes on storage).
 
-        Scale shape: reads ONLY the candidate buckets and shuffles only
-        their rows (one explicit ``repartition(num_buckets, *keys)`` —
-        the same murmur3-pmod as the bucket layout, so reduce partition
-        i holds exactly bucket i and the bucketed write emits one file
-        per bucket with no further exchange). Untouched buckets keep
-        their manifest entries verbatim. Watermarks, applied-batch ids,
+        Scale shape: reads ONLY the candidate buckets, aligned to the
+        layout by one ``repartition(num_buckets, *keys)`` — the same
+        murmur3-pmod as the bucket layout, so reduce partition i holds
+        exactly bucket i and the bucketed write emits one file per
+        bucket with no further exchange. Spark drops that repartition
+        when the read is already a bucketed scan, as a delta fold of
+        several buckets is (``_state_scan``): no row moves. Untouched
+        buckets keep their manifest entries verbatim. Watermarks, applied-batch ids,
         and the schema log are unchanged; older snapshots keep reading
         their own files (time travel), which ``expire_snapshots`` +
         ``vacuum_orphans`` later reclaim. Crash-safe: files land in a
@@ -2496,7 +2558,7 @@ class LakeTable:
         explicit logical schema, so the extra column is invisible.
         Clustered files are NOT key-sorted: the merge's bucketed scan
         declares the key sort only for unclustered buckets (see
-        ``_bucketed_scan``) — the apply-side sort-merge join re-sorts,
+        ``_state_scan``) — the apply-side sort-merge join re-sorts,
         which is the standard cost of clustering.
         """
         snap = self.current_snapshot()

@@ -4,9 +4,9 @@
     python scripts/ab.py REV_A REV_B --workload trickle --workload serve \\
         --seeds 1-5 [--trace 0|1]
 
-Checks each revision out with ``git worktree`` under ``.ab/`` and, for
+Extracts each revision with ``git archive`` under ``.ab/`` and, for
 every workload and seed, runs ``perfbench/run.py --workload W --seed S
---seconds T --trace X`` once in each checkout, with ``T`` the
+--seconds T --trace X`` once in each copy, with ``T`` the
 ``run_seconds`` of BENCHMARK.json, one run at a time. The
 revision that goes first alternates from seed to seed, so a slow window
 of the host falls on both revisions alike.
@@ -15,10 +15,15 @@ Prints one JSON document. Per workload and metric it holds each
 revision's median and quartiles (``statistics.quantiles(n=4)``), the gap
 of B's median against A's as a share of A's (signed so that a positive
 gap is B being worse, by the metric's ``better`` in BENCHMARK.json), and
-each revision's median split by which revision ran first. Every run is
-listed with its seed, order, wall time, correctness and failed
-operations. Exits 1 unless every run is correct with 0 failed. The
-worktrees are removed at the end.
+each revision's median split by which revision ran first. It also
+applies the claim rule: ``b_wins`` counts the seeds whose pair B won
+(a tie counts for neither side) out of ``pairs``, and ``beyond_iqr``
+says whether the medians lie further apart than A's q3 - q1. Every run
+is listed with its seed, order, wall time, correctness, failed
+operations, failed checks, and the ``rounds`` and ``host_steal_share``
+of its detail line: a faster revision may fit a second, warmer round
+into the same measured phase. Exits 1 unless every run is correct with
+0 failed. The extracted copies are removed at the end.
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -47,7 +53,10 @@ def checkout(rev: str) -> str:
     sha = git("rev-parse", "--verify", f"{rev}^{{commit}}")
     path = os.path.join(REPO, ".ab", sha[:12])
     if not os.path.isdir(path):
-        git("worktree", "add", "--detach", path, sha)
+        os.makedirs(path)
+        tar = subprocess.run(["git", "archive", sha], cwd=REPO, check=True,
+                             capture_output=True).stdout
+        subprocess.run(["tar", "-x", "-C", path], input=tar, check=True)
     return path
 
 
@@ -62,8 +71,10 @@ def run_one(path: str, workload: str, seed: int, seconds: float, trace: int) -> 
         sys.stderr.write(p.stderr[-4000:])
         raise SystemExit(f"{path}: {workload} seed {seed} printed no result (exit {p.returncode})")
     res = json.loads(lines[-1])
+    detail = json.loads(lines[-2])["detail"] if len(lines) > 1 else {}
     return {"wall_s": round(wall, 1), "correct": res["correct"], "failed": res["failed"],
-            "attempted": res["attempted"],
+            "attempted": res["attempted"], "failed_checks": detail.get("failed_checks"),
+            "rounds": detail.get("rounds"), "host_steal_share": detail.get("host_steal_share"),
             "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
 
 
@@ -75,11 +86,16 @@ def compare(runs: list[dict], better: dict[str, str]) -> dict:
                     if r["rev"] == side and first in (None, r["first"])]
 
         a, b = summarize(values("a")), summarize(values("b"))
-        gap = (b["median"] - a["median"]) / a["median"] if a["median"] else 0.0
-        if better.get(name) == "higher":
-            gap = -gap
+        sign = -1 if better.get(name) == "higher" else 1
+        gap = sign * (b["median"] - a["median"]) / a["median"] if a["median"] else 0.0
+        pairs = {}
+        for r in runs:
+            pairs.setdefault(r["seed"], {})[r["rev"]] = r["metrics"][name]
         out[name] = {
             "a": a, "b": b, "gap": round(gap, 4),
+            "pairs": len(pairs),
+            "b_wins": sum(sign * (p["b"] - p["a"]) < 0 for p in pairs.values()),
+            "beyond_iqr": abs(b["median"] - a["median"]) > a["q3"] - a["q1"],
             "by_order": {f"{first}_first": {side: statistics.median(values(side, first))
                                             for side in "ab" if values(side, first)}
                          for first in "ab"},
@@ -113,7 +129,8 @@ def main(argv=None) -> int:
                     r = run_one(dirs[side], w, seed, seconds, args.trace)
                     runs.append({"rev": side, "seed": seed, "first": order[0], **r})
                     print(f"{w} seed {seed} {side}: wall {r['wall_s']} s, correct {r['correct']}, "
-                          f"failed {r['failed']}/{r['attempted']}", file=sys.stderr, flush=True)
+                          f"failed {r['failed']}/{r['attempted']}, rounds {r['rounds']}, "
+                          f"steal {r['host_steal_share']}", file=sys.stderr, flush=True)
             report["workloads"][w] = {
                 "correct": all(r["correct"] for r in runs),
                 "failed": sum(r["failed"] for r in runs),
@@ -122,7 +139,7 @@ def main(argv=None) -> int:
             }
     finally:
         for path in set(dirs.values()):
-            git("worktree", "remove", "--force", path)
+            shutil.rmtree(path)
     print(json.dumps(report, indent=1))
     return 0 if all(w["correct"] and not w["failed"] for w in report["workloads"].values()) else 1
 

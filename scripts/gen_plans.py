@@ -83,9 +83,8 @@ def main() -> None:
         LakeTable._write_bucketed = _spy
         engine.replay(spark, ev2, 1001, 2000, batch_size=1000)
         cow_plan = captured[-1]
-        # change-data-feed between the two delta-free cow snapshots
-        # (both sides bucketed scans, shuffle-free; a delta-carrying
-        # snapshot is read through read()'s merge and shuffles by design)
+        # change-data-feed between the two cow snapshots (both sides
+        # bucketed scans, shuffle-free)
         cdf_plan = formatted(table.read_changes(spark, from_version=1, to_version=2))
         # merge-on-read append: same batch shape, no table side at all
         table.apply_batch(
@@ -96,6 +95,10 @@ def main() -> None:
         )
         mor_plan = captured[-1]
         LakeTable._write_bucketed = orig_write
+        # reads with that delta pending: merged in place
+        mor_read_plan = formatted(table.read(spark))
+        probe = table.read(spark).orderBy("repo", "path").first()
+        mor_key_plan = formatted(table.read_key(spark, repo=probe.repo, path=probe.path))
     finally:
         LakeTable._write_bucketed = orig_write
     sections.append(
@@ -120,8 +123,23 @@ def main() -> None:
             "O(batch) at any table size (trickle-ingest regime; measured "
             "65× write-amplification reduction in BENCH/MOR.md). Deltas "
             "carry the op column as tombstones; reads merge base+deltas "
-            "by seq and compact() folds them back.",
+            "by seq in place (next section) and compact() folds them back.",
             mor_plan,
+        )
+    )
+    sections.append(
+        (
+            "Merge-on-read read in place (read, then read_key, deltas pending)",
+            "Each bucket's base and delta files are ONE `FileScan` whose "
+            "ReadSchema adds the `op` column (base files lack it and read "
+            "null); the last-writer-wins `Window` (seq desc, then op nulls "
+            "last: a delta row beats a base row of equal seq) runs inside "
+            "each bucket — `Bucketed: true` for the whole table, `Coalesce 1` "
+            "(one task) for the one bucket a point lookup reads, with the "
+            "key equalities pushed into the scan. ZERO `Exchange` in either "
+            "plan (asserted by "
+            "tests/test_lake.py::test_mor_reads_are_shuffle_free).",
+            mor_read_plan + "\n\n" + mor_key_plan,
         )
     )
     shutil.rmtree(tmp, ignore_errors=True)

@@ -1254,7 +1254,8 @@ def test_cow_and_mor_converge_when_a_merge_outranks_a_later_event(
     event at seq 500 passes the fence. It must lose to the merged row
     (and its delete must not drop the key) whether the batch is
     appended as a delta, rewritten over a delta-free bucket, or
-    rewritten over a bucket with a pending delta."""
+    rewritten over a bucket with a pending delta. Events at exactly
+    seq 1000 win the tie on every path."""
     sch = "repo string, path string, seq long, op string, content string"
 
     def batch(rows):
@@ -1292,6 +1293,18 @@ def test_cow_and_mor_converge_when_a_merge_outranks_a_later_event(
         states[name] = sorted(
             (r.path, r.seq, r.content) for r in t.read(spark).collect()
         )
+        # the cow merge's batch row wins on seq >=; merge-on-read ranks
+        # a delta row above a base row of equal seq to match
+        st = t.apply_batch(
+            spark,
+            batch([("r", "z", 1000, "U", "z-event"), ("r", "w", 1000, "D", None)]),
+            "b4",
+            mode=modes[2],
+        )
+        assert st.applied and st.events_fenced == 0 and st.mode == modes[2]
+        states[name + "_tie"] = sorted(
+            (r.path, r.seq, r.content) for r in t.read(spark).collect()
+        )
     assert states["cow"] == [
         ("a", 1, "a1"),
         ("b", 2, "b1"),
@@ -1301,6 +1314,153 @@ def test_cow_and_mor_converge_when_a_merge_outranks_a_later_event(
     ]
     assert states["mor"] == states["cow"]
     assert states["cow_over_delta"] == states["cow"]
+    assert states["cow_tie"] == [
+        ("a", 1, "a1"),
+        ("b", 2, "b1"),
+        ("y", 3, "y1"),
+        ("z", 1000, "z-event"),
+    ]
+    assert states["mor_tie"] == states["cow_tie"]
+    assert states["cow_over_delta_tie"] == states["cow_tie"]
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _mor_table(spark, path, num_buckets=4, n_events=400):
+    """A table whose every bucket carries one pending merge-on-read delta."""
+    t = LakeTable(path, num_buckets=num_buckets, merge_mode="mor")
+    ev = synth.events(spark, n_events, n_repos=10)
+    t.apply_batch(spark, ev.where(F.col("seq") <= n_events * 3 // 4), "p1", mode="cow")
+    t.apply_batch(spark, ev.where(F.col("seq") > n_events * 3 // 4), "p2")
+    buckets = t.current_snapshot()["buckets"]
+    assert len(buckets) == num_buckets
+    assert all(m.get("deltas") for m in buckets.values())
+    return t
+
+
+def test_mor_reads_are_shuffle_free(spark, tmp_path):
+    """Physical-plan gate for merge-on-read in place: with a delta
+    pending in every bucket, each bucket's base and delta rows resolve
+    from one relation inside the bucket. read(), read_changes across
+    the delta commit and compact plan no exchange; read_key plans one
+    task; a copy-on-write apply folding the delta shuffles only its
+    batch."""
+    t = _mor_table(spark, str(tmp_path / "lake"))
+    want = sorted(map(tuple, t.read(spark).collect()))
+
+    plan = _executed(t.read(spark))
+    assert "Exchange" not in plan and "Bucketed: true" in plan, plan
+    plan = _executed(t.read_changes(spark, from_version=1, to_version=2))
+    assert "Exchange" not in plan and plan.count("Bucketed: true") == 2, plan
+
+    row = t.read(spark).orderBy("repo", "path").first()
+    hit = t.read_key(spark, repo=row.repo, path=row.path)
+    assert "Exchange" not in _executed(hit), _executed(hit)
+    sc = spark.sparkContext
+    sc.setJobGroup("read_key_gate", "read_key", False)
+    try:
+        assert [tuple(r) for r in hit.collect()] == [tuple(row)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup("read_key_gate"))
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert len(jobs) == 1 and tasks == [1], (jobs, tasks)
+
+    captured: list[str] = []
+    orig = LakeTable._write_bucketed
+
+    def spy(self, spark_, df, out_dir, **kw):
+        captured.append(_executed(df))
+        return orig(self, spark_, df, out_dir, **kw)
+
+    # a cow apply over buckets 0 and 1 folds their deltas; compact then
+    # folds the deltas still pending in buckets 2 and 3
+    upd = (
+        t.read(spark)
+        .where(t._bucket_expr().isin(0, 1))
+        .withColumn("seq", F.col("seq") + 10_000)
+        .withColumn("op", F.lit("U"))
+    )
+    upd = spark.createDataFrame(upd.collect(), upd.schema)  # a batch from outside
+    LakeTable._write_bucketed = spy
+    try:
+        assert t.apply_batch(spark, upd, "fold", mode="cow").mode == "cow"
+        t.compact(spark)
+    finally:
+        LakeTable._write_bucketed = orig
+    assert len(captured) == 2
+    assert captured[0].count("Exchange hashpartitioning") == 1, captured[0]
+    assert "Exchange rangepartitioning" not in captured[0], captured[0]
+    assert "Exchange" not in captured[1], captured[1]
+    bumped = {(r.repo, r.path) for r in upd.collect()}
+    assert sorted(map(tuple, t.read(spark).collect())) == sorted(
+        (seq + 10_000 if (repo, path) in bumped else seq, repo, path, *rest)
+        for seq, repo, path, *rest in want
+    )
+    assert not any(m.get("deltas") for m in t.current_snapshot()["buckets"].values())
+    assert t.verify_bucket_checksums(spark) == []
+
+
+def test_mor_read_through_a_cast_merges_behind_a_shuffle(spark, tmp_path):
+    """A delta whose base needs a cast the parquet reader cannot do
+    (smallint -> float) is merged per schema version behind a shuffle,
+    with the same tie rule as the in-place merge: at an equal seq the
+    delta row beats the base row."""
+    t = LakeTable(str(tmp_path / "lake"), num_buckets=1)
+    sch = "repo string, path string, seq long, op string, v smallint"
+    t.apply_batch(
+        spark, spark.createDataFrame([("r", "a", 1, "U", 1), ("r", "b", 2, "U", 2)], sch),
+        "b1",
+    )
+    t.merge_into(
+        spark,
+        spark.createDataFrame([("r", "z", 1000, "U", 3)], sch).drop("op"),
+        "m1",
+    )
+    t.apply_batch(
+        spark,
+        spark.createDataFrame(
+            [("r", "a", 5, "U", 1.5), ("r", "z", 1000, "U", 2.5)],
+            "repo string, path string, seq long, op string, v float",
+        ),
+        "b2",
+        mode="mor",
+    )
+    df = t.read(spark)
+    assert "Exchange hashpartitioning" in _executed(df), _executed(df)
+    assert sorted((r.path, r.seq, r.v) for r in df.collect()) == [
+        ("a", 5, 1.5),
+        ("b", 2, 2.0),
+        ("z", 1000, 2.5),
+    ]
+
+
+def test_read_key_steady_state_compiles_nothing(spark, tmp_path):
+    """After one warm lookup, lookups of other keys in other buckets
+    reuse its generated code: the key literals reach the plan as
+    reference objects, not inlined constants, so no Janino compile."""
+    t = _mor_table(spark, str(tmp_path / "lake"), num_buckets=16, n_events=800)
+    bucket = t._bucket_expr().alias("b")
+    rows = t.read(spark).select("repo", "path", bucket).orderBy("repo", "path").collect()
+    first: dict[int, tuple] = {}
+    for r in rows:
+        first.setdefault(r.b, (r.repo, r.path))
+    assert len(first) >= 9
+    (warm, *others) = list(first.values())[:9]
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    assert len(t.read_key(spark, repo=warm[0], path=warm[1]).collect()) == 1
+    before = compiles.getCount()
+    for repo, path in others:
+        assert len(t.read_key(spark, repo=repo, path=path).collect()) == 1
+    assert compiles.getCount() == before
 
 
 def test_time_travel_by_timestamp(spark, tmp_path):
